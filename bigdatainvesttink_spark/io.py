@@ -13,20 +13,6 @@ from pyspark.sql import functions as F
 
 from .session import configure
 
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one fixture table; normalizes events.ts (nanos -> ntz micros).
 
@@ -42,9 +28,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             "ts", F.timestamp_micros(F.expr("ts div 1000")).cast("timestamp_ntz")
         )
     return df
-
-
-def register_views(spark: SparkSession, sf_dir: str, tables=TABLES) -> None:
-    """Register every fixture table as a temp view for spark.sql queries."""
-    for name in tables:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -1,16 +1,10 @@
-"""Pure-stdlib Snappy and LZ4 codecs (decode + encoders for fixtures).
+"""Pure-stdlib Snappy and LZ4 codecs (decode + encoders for fixtures) and
+the executor-side decompression seam for binary payload columns.
 
-A 100 TB corpus does not arrive as loose UTF-8: document payloads come
-compressed — parquet pages and wire blobs are overwhelmingly Snappy or
-LZ4, with gzip/zlib the legacy tail (stdlib already covers those). This
-module gives the binary-column family a decompression seam with the same
-discipline as the image/audio codec seams (multimodal.py): a real
-bit-level implementation of each PUBLIC format, NOT a wrapper, with the
-container's pyarrow build used as an independent ORACLE in the tests
-(both directions, byte-exact — the lesson of the VP8L work is that a
-self-consistent codec pair proves nothing).
-
-Scope:
+Document payloads in a large corpus usually arrive compressed: parquet
+pages and wire blobs are overwhelmingly Snappy or LZ4, with gzip/zlib the
+legacy tail. Snappy and LZ4 have bit-level implementations here, held
+byte-exact against pyarrow's C codecs in the tests (both directions):
 
 - Snappy (the raw/block format used by parquet pages): varint
   uncompressed length; literal elements (tags 60-63 for 1-4 extra
@@ -22,15 +16,14 @@ Scope:
   copies, and the literals-only terminal sequence.
 - LZ4 FRAME: magic 0x184D2204, flag/BD descriptor with the xxHash32
   header-checksum byte, independent data blocks (high-bit = stored
-  uncompressed), optional per-block checksums, and the optional content
-  checksum — xxHash32 implemented here too (public algorithm, needed by
-  the frame format).
+  uncompressed), optional per-block checksums, the optional content
+  checksum, and external raw dictionaries — the one frame feature
+  pyarrow's streaming decoder cannot take, so the pure decoder serves it.
 
-Reference parity note: the reference repo consumes small JSON messages
-from AMQP and never touches compressed blobs; this module exists for
-the large-scale training-data pipeline extensions (SURVEY.md LLM-ops
-section), where decompression must run executor-side inside the Arrow
-batch path, never on the driver.
+The reference repo consumes small JSON messages from AMQP and never
+touches compressed blobs; this module serves the training-data pipeline
+extensions (SURVEY.md LLM-ops section), where decompression must run
+executor-side inside the Arrow batch path, never on the driver.
 """
 
 from __future__ import annotations
@@ -330,10 +323,10 @@ _LZ4_MAGIC = 0x184D2204
 def decode_lz4_frame(data: bytes, dictionary: bytes | None = None) -> bytes:
     """Decode an LZ4 frame payload (magic, descriptor with xxHash32
     header checksum, independent/stored blocks, optional block and
-    content checksums) to its exact original bytes. Like .zst, .lz4
-    files are frame SEQUENCES: concatenated frames decode to the
-    concatenation and skippable frames (magic 0x184D2A5x) are ignored —
-    the lz4 CLI produces exactly such files when appending.
+    content checksums) to its exact original bytes. .lz4 files are frame
+    SEQUENCES: concatenated frames decode to the concatenation and
+    skippable frames (magic 0x184D2A5x) are ignored — the lz4 CLI
+    produces exactly such files when appending.
 
     ``dictionary`` is the external-dictionary content (frame spec
     §Dictionary-ID): only its LAST 64 KB matter, used raw — the lz4 CLI
@@ -343,11 +336,10 @@ def decode_lz4_frame(data: bytes, dictionary: bytes | None = None) -> bytes:
     blocks are independent, and for the frame's first 64 KB of output
     when blocks are linked (after which the window is all frame bytes).
     Every frame in the sequence decodes against the same dictionary.
-    NOTE the asymmetry with zstd: frames compressed with a raw
-    dictionary usually do NOT set the DictID flag (lz4 -D never does),
-    so a missing dictionary is only detectable as a match-offset error;
-    when the flag IS set and no dictionary is supplied, this fails loud
-    up front."""
+    Frames compressed with a raw dictionary usually do NOT set the DictID
+    flag (lz4 -D never does), so a missing dictionary is only detectable
+    as a match-offset error; when the flag IS set and no dictionary is
+    supplied, this fails loud up front."""
     if len(data) < 4:
         raise ValueError("malformed lz4 frame: truncated magic")
     (first_magic,) = struct.unpack_from("<I", data, 0)
@@ -510,38 +502,27 @@ def encode_lz4_frame(
 
 
 def decompress_payload(
-    content: bytes, algo: str, prefer_native: bool = True,
-    dictionary: bytes | None = None,
+    content: bytes, algo: str, dictionary: bytes | None = None,
 ) -> bytes:
     """Executor-side decompression dispatch for opaque binary payload
     columns — the compressed-corpus analog of multimodal.decode_image.
-    ``algo``: snappy | lz4 (frame) | lz4_block | zstd | gzip | zlib |
-    xz | bz2 | brotli | auto (auto sniffs the self-describing magics;
-    snappy/lz4_block/brotli have none and must be named — RFC 7932
-    defines no magic number, exactly the Content-Encoding:br situation
-    where the algo arrives out-of-band). xz and bz2 route through the
-    stdlib (lzma/bz2 — the same standard-library tier as the gzip/zlib
-    paths): both are corpus-dump staples (.warc.xz, Wikipedia .bz2)
-    whose stream formats are multi-member like gzip, handled by looping
-    members until input is exhausted. brotli — the web-corpus codec —
-    decodes via the pure-Python RFC 7932 decoder (brotli_codec.py);
-    pyarrow ships a brotli codec but its API requires the decompressed
-    size up front, which an opaque payload column doesn't carry, so
-    unlike lz4/zstd there is no native fast path (the tests still
-    cross-check against pyarrow with the size supplied).
 
-    At 100 TB the hot path matters: every Spark executor already ships
-    pyarrow's C codecs, so the SELF-DESCRIBING frame formats (lz4 frame,
-    zstd) route through them by default — the pure-Python decoders are
-    the format proof, the verification fallback, and the oracle twins
-    the tests hold the native path to. ``prefer_native=False`` forces
-    pure Python (the tests run both and require byte equality).
+    ``algo``: snappy | lz4 (frame) | lz4_block | zstd | gzip | zlib | xz |
+    bz2 | auto. ``auto`` sniffs the self-describing magics; snappy and
+    lz4_block have none and must be named. gzip, xz, bz2, lz4 and zstd
+    payloads are member SEQUENCES: concatenated members decode to the
+    concatenation (lz4/zstd skippable frames are ignored), never just
+    the first member.
 
-    ``dictionary``: an external decoding dictionary blob (zstd:
-    structured or raw-content; lz4 frame: raw content, last 64 KB;
-    broadcast it once per job, dictionary-per-shard is the standard
-    corpus layout). pyarrow's codec API takes no dictionary, so
-    supplying one routes through the pure-Python decoders."""
+    lz4 frames and zstd decode through pyarrow's native streaming codecs;
+    snappy and lz4_block through the pure decoders above; gzip, zlib, xz
+    and bz2 through the stdlib. Malformed input raises ValueError on every
+    path.
+
+    ``dictionary``: an lz4-frame external dictionary blob (raw content,
+    last 64 KB; broadcast it once per job — dictionary-per-shard is the
+    standard corpus layout). pyarrow's stream API takes no dictionary, so
+    dictionary frames decode in the pure ``decode_lz4_frame``."""
     import zlib
 
     if algo == "auto":
@@ -576,31 +557,24 @@ def decompress_payload(
                 "auto: no self-describing magic (snappy/lz4_block payloads "
                 "must name their algo)"
             )
-    if dictionary is not None and algo not in ("zstd", "lz4"):
-        raise ValueError("dictionary decoding is zstd/lz4-frame-only")
-    if (
-        prefer_native and algo in ("lz4", "zstd") and dictionary is None
-    ):
-        # NOTE brotli stays OFF the native path: pyarrow's Codec API
-        # demands decompressed_size for brotli (no streaming one-shot),
-        # which an opaque payload column doesn't carry — the pure
-        # decoder is the product path, pyarrow the test cross-check.
-        try:
-            import pyarrow as pa
+    if dictionary is not None:
+        if algo != "lz4":
+            raise ValueError("dictionary decoding is lz4-frame-only")
+        return decode_lz4_frame(content, dictionary=dictionary)
+    if algo in ("lz4", "zstd"):
+        import pyarrow as pa
 
-            return bytes(pa.Codec(algo).decompress(content))
-        except Exception:
-            pass  # fall through to the pure-Python implementations
+        if not content:
+            raise ValueError(f"malformed {algo}: empty payload")
+        try:
+            return pa.input_stream(
+                pa.py_buffer(content), compression=algo).read()
+        except OSError as exc:
+            raise ValueError(f"malformed {algo}: {exc}") from exc
     if algo == "snappy":
         return decode_snappy(content)
-    if algo == "lz4":
-        return decode_lz4_frame(content, dictionary=dictionary)
     if algo == "lz4_block":
         return decode_lz4_block(content)
-    if algo == "zstd":
-        from .zstd_codec import decode_zstd
-
-        return decode_zstd(content, dictionary=dictionary)
     if algo == "gzip":
         # gzip files are member SEQUENCES (Common Crawl WET/WARC files
         # concatenate thousands) — a one-shot zlib.decompress(wbits=31)
@@ -633,10 +607,6 @@ def decompress_payload(
                 raise ValueError("malformed xz: truncated stream")
             rest = d.unused_data.lstrip(b"\x00")  # stream padding
         return bytes(out)
-    if algo == "brotli":
-        from .brotli_codec import decode_brotli
-
-        return decode_brotli(content)
     if algo == "bz2":
         import bz2 as _bz2
 
@@ -661,10 +631,10 @@ def decompress_docs(binary_df, algo: str = "auto",
     payload with its size accounting so downstream text operators see
     exactly the bytes that were compressed.
 
-    ``dictionary``: the shard's shared decoding dictionary (zstd
-    structured/raw, or lz4-frame raw — dictionary-per-shard is the
-    standard corpus layout). Captured by the closure, so Spark ships it
-    once per task with the serialized function, not per row."""
+    ``dictionary``: the shard's shared lz4-frame decoding dictionary
+    (raw content — dictionary-per-shard is the standard corpus layout).
+    Captured by the closure, so Spark ships it once per task with the
+    serialized function, not per row."""
     import pandas as pd
 
     def run(batches):
@@ -691,8 +661,8 @@ def decompress_docs(binary_df, algo: str = "auto",
 # Registered query: the compressed-corpus roundtrip as a driver-checked
 # surface. A crawl-scale corpus arrives as per-shard payloads in whatever
 # codec each upstream dump used — this query compresses every document
-# executor-side with an algo chosen per doc (all six non-brotli codecs the
-# seam decodes; brotli has no in-product encoder), pushes the bytes back
+# executor-side with an algo chosen per doc (six of the codecs the seam
+# decodes), pushes the bytes back
 # through decompress_payload (auto-sniffed where the format self-describes,
 # named for snappy, exactly the production contract), and aggregates
 # per-algo counts/byte-sums/checksums over the RECOVERED text. The DuckDB

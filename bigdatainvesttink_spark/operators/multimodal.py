@@ -1,24 +1,18 @@
 """Multimodal column plumbing (SURVEY north-star: image/audio/video as
 opaque binary columns with typed metadata).
 
-Both codec seams carry REAL formats, proving pluggability: ``decode_audio``
-decodes PCM WAV (stdlib ``wave``) and FLAC (flac_codec.py — bit-level
-lossless decode, CRC-verified, round 7); ``decode_image`` decodes 8-bit
-gray/RGB/RGBA PNG (stdlib ``zlib`` — header parse, inflate, scanline
-un-filter incl. Adam7 since r8) and JPEG (jpeg_codec.py — Huffman +
-IDCT; baseline round 6, progressive/SOF2 round 8),
-each with a sample-exact (or 1-LSB for lossy JPEG) roundtrip test, plus
-WebP in BOTH profiles (lossless VP8L round 7, lossy VP8 round 10 —
-vp8_codec.py, YUV byte-exact vs libwebp) and the still VP8X extended
-container with its ALPH alpha plane (round 10). Formats whose entropy
-coders genuinely lack an oracle here (MP3's hybrid filterbank, animated
-VP8X) raise a clearly-marked NotImplementedError, and the
-registered pipeline queries run with ``fake_decode_meta`` — a deterministic
-stand-in that derives metadata from the md5 of the bytes (SQL-oracle
-checkable, which a real codec's output would not be). What
-IS real and tested is everything Spark-side: the binary column, the typed
-metadata schema, Arrow-batched ``mapInPandas`` with correct batch iteration,
-and the partition-parallel plan (no driver loops, no collect).
+Both codec seams carry one REAL format, proving pluggability:
+``decode_audio`` decodes PCM WAV (stdlib ``wave``) and ``decode_image``
+decodes 8-bit gray/RGB/RGBA/palette PNG (stdlib ``zlib`` — header parse,
+inflate, scanline un-filter incl. Adam7), each with a sample-exact
+roundtrip test. Every other format raises a clearly-marked
+NotImplementedError, and the registered pipeline queries run with
+``fake_decode_meta`` — a deterministic stand-in that derives metadata from
+the md5 of the bytes (SQL-oracle checkable, which a real codec's output
+would not be). What IS real and tested is everything Spark-side: the
+binary column, the typed metadata schema, Arrow-batched ``mapInPandas``
+with correct batch iteration, and the partition-parallel plan (no driver
+loops, no collect).
 
 At 100 TB the exact same shape holds: binary payloads stay columnar in
 parquet, mapInPandas streams Arrow batches through the Python worker, and
@@ -55,122 +49,23 @@ _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 
 
 def decode_image(content: bytes) -> dict:
-    """REAL image decode for PNG via stdlib ``zlib`` (VERDICT r4 stretch
-    ask #7) — PNG is just length-prefixed chunks + a zlib-deflated,
-    per-scanline-filtered pixel stream, so no codec library is needed:
-    parse IHDR for dimensions, inflate the IDAT stream, and un-filter
-    scanlines (filter types 0-4) back to raw samples. Returns the same
-    dict-per-row contract as fake_decode_meta through the identical
-    extract_meta mapInPandas harness; ``decoded_pixels`` carries the
-    recovered sample bytes so tests can assert a sample-exact roundtrip
-    (mirroring the WAV proof in decode_audio). Baseline sequential JPEG
-    decodes for real too (round 6 — jpeg_codec.py, stdlib + numpy
-    Huffman/IDCT). Animated GIF decodes for real too (round 7 —
-    gif_codec.py, stdlib LZW + frame composition), making it the first
-    format whose n_frames is an actual decoded frame count rather than
-    header metadata. WebP decodes for real in BOTH profiles: lossless
-    VP8L (round 7 — webp_codec.py, bit-exact vs libwebp) and lossy VP8
-    (round 10 — vp8_codec.py, the full RFC 6386 keyframe decoder, YUV
-    planes byte-exact vs WebPDecodeYUV), plus the still VP8X extended
-    container with alpha (round 10). Remaining raises: animated VP8X
-    and the documented PNG/JPEG subset guards."""
+    """REAL image decode for PNG via stdlib ``zlib`` — PNG is just
+    length-prefixed chunks + a zlib-deflated, per-scanline-filtered pixel
+    stream, so no codec library is needed: parse IHDR for dimensions,
+    inflate the IDAT stream, and un-filter scanlines (filter types 0-4)
+    back to raw samples. Returns the same dict-per-row contract as
+    fake_decode_meta through the identical extract_meta mapInPandas
+    harness; ``decoded_pixels`` carries the recovered sample bytes so
+    tests can assert a sample-exact roundtrip (mirroring the WAV proof in
+    decode_audio). Any other format, and the documented PNG subset
+    guards, raise NotImplementedError."""
     import struct
     import zlib
 
-    if content[:4] == b"RIFF" and content[8:12] == b"WEBP":
-        # REAL WebP decode, both profiles plus the extended container:
-        # lossless VP8L (round 7 — prefix codes + LZ77 + color cache +
-        # all four transforms, webp_codec.py), lossy VP8 (round 10 —
-        # the full RFC 6386 keyframe decoder in vp8_codec.py, YUV
-        # planes byte-exact vs WebPDecodeYUV; RGBA here via the
-        # documented point-upsample + libwebp integer BT.601
-        # conversion), and still VP8X with the losslessly-coded ALPH
-        # alpha plane (round 10). Animated VP8X stays guarded.
-        if content[12:16] == b"VP8X":
-            from .webp_codec import decode_webp_extended
-
-            v = decode_webp_extended(content)
-            return {
-                "n_bytes": len(content),
-                "fmt": "webp",
-                "width": v["width"],
-                "height": v["height"],
-                "n_frames": 1,
-                "thumb_width": min(v["width"], 256),
-                "thumb_height": min(v["height"], 256),
-                "decoded_pixels": v["pixels"],
-            }
-        if content[12:16] == b"VP8 ":
-            from .vp8_codec import decode_webp_lossy, yuv420_to_rgba
-
-            d = decode_webp_lossy(content)
-            return {
-                "n_bytes": len(content),
-                "fmt": "webp",
-                "width": d["width"],
-                "height": d["height"],
-                "n_frames": 1,
-                "thumb_width": min(d["width"], 256),
-                "thumb_height": min(d["height"], 256),
-                "decoded_pixels": yuv420_to_rgba(
-                    d["y"], d["u"], d["v"], d["width"], d["height"]
-                ),
-            }
-        from .webp_codec import decode_webp_lossless
-
-        v = decode_webp_lossless(content)
-        return {
-            "n_bytes": len(content),
-            "fmt": "webp",
-            "width": v["width"],
-            "height": v["height"],
-            "n_frames": 1,
-            "thumb_width": min(v["width"], 256),
-            "thumb_height": min(v["height"], 256),
-            "decoded_pixels": v["pixels"],
-        }
-    if content[:6] in (b"GIF87a", b"GIF89a"):
-        # REAL GIF decode (round 7): stdlib LZW + disposal/transparency
-        # frame composition in gif_codec.py; decoded_pixels carries the
-        # FIRST composed frame's RGB (the thumbnail source), n_frames the
-        # true animation length
-        from .gif_codec import decode_gif
-
-        g = decode_gif(content)
-        return {
-            "n_bytes": len(content),
-            "fmt": "gif",
-            "width": g["width"],
-            "height": g["height"],
-            "n_frames": g["n_frames"],
-            "thumb_width": min(g["width"], 256),
-            "thumb_height": min(g["height"], 256),
-            "decoded_pixels": g["frames"][0],
-        }
-    if content.startswith(b"\xff\xd8"):
-        # REAL JPEG decode: stdlib + numpy T.81 codec in jpeg_codec.py —
-        # baseline sequential (r5), progressive/SOF2 (r8), arithmetic
-        # SOF9/SOF10 (r9); hierarchical/lossless/12-bit raise
-        # NotImplementedError there
-        from .jpeg_codec import decode_jpeg
-
-        j = decode_jpeg(content)
-        return {
-            "n_bytes": len(content),
-            "fmt": "jpeg",
-            "width": j["width"],
-            "height": j["height"],
-            "n_frames": 1,
-            "thumb_width": min(j["width"], 256),
-            "thumb_height": min(j["height"], 256),
-            "decoded_pixels": j["pixels"],
-        }
     if not content.startswith(_PNG_SIG):
         raise NotImplementedError(
-            "only PNG, JPEG (baseline+progressive+arithmetic), GIF and "
-            "WebP (lossless VP8L + lossy VP8) decodable in this "
-            "environment (stdlib zlib/numpy); use fake_decode_meta "
-            "for plumbing tests"
+            "only PNG decodable in this environment (stdlib zlib); use "
+            "fake_decode_meta for plumbing tests"
         )
     pos, width = len(_PNG_SIG), None
     height = bit_depth = color_type = None
@@ -195,12 +90,12 @@ def decode_image(content: bytes) -> dict:
             ) = struct.unpack(">IIBBBBB", data[:13])
             # PNG §11.2.2: zero width/height is invalid — fail as
             # malformed input, not via max() on an empty index plane
-            # downstream (ADVICE r8)
+            # downstream
             if width == 0 or height == 0:
                 raise ValueError("malformed PNG: zero-dimension image")
             # the un-filter assumes zlib/filter-0 coding; interlace may
-            # be 0 (sequential) or 1 (Adam7, real since r8 — the seven
-            # passes unfilter independently and scatter to screen order)
+            # be 0 (sequential) or 1 (Adam7 — the seven passes unfilter
+            # independently and scatter to screen order)
             if compression != 0 or filter_method != 0 or interlace > 1:
                 raise NotImplementedError(
                     "PNG subset: zlib-deflate, filter method 0, "
@@ -218,7 +113,7 @@ def decode_image(content: bytes) -> dict:
     if width is None or not idat:
         raise ValueError("malformed PNG: missing IHDR/IDAT")
     if color_type == 3:
-        # indexed-color (r8): depths 1/2/4/8; tRNS supplies per-entry
+        # indexed-color: depths 1/2/4/8; tRNS supplies per-entry
         # alpha for the leading palette entries, 255 elsewhere
         if bit_depth not in (1, 2, 4, 8):
             raise NotImplementedError("PNG subset: palette depth 1/2/4/8")
@@ -233,7 +128,7 @@ def decode_image(content: bytes) -> dict:
             inflated, width, height, bit_depth, interlace
         )
         n_entries = len(palette) // 3
-        # `idx` is empty for a degenerate 0x0 image (ADVICE r8): skip the
+        # `idx` is empty for a degenerate 0x0 image: skip the
         # range check rather than let max() raise its bare empty-sequence
         # error — zero pixels reference no palette entry
         if idx and max(idx) >= n_entries:
@@ -462,33 +357,16 @@ AUDIO_META_SCHEMA = (
 
 def decode_audio(content: bytes) -> dict:
     """REAL audio decode for PCM WAV via stdlib ``wave`` — the proof that
-    the NotImplementedError codec seam is genuinely pluggable (VERDICT r3
-    ask #7): same dict-per-row contract as fake_decode_meta, driven through
-    the identical extract_meta mapInPandas harness. FLAC decodes for real
-    too (round 7 — flac_codec.py, stdlib + numpy bit-level lossless
-    decoder, CRC-verified). Other payloads (MP3 etc.) still raise,
-    same as decode_image, because no other codec ships here."""
+    the NotImplementedError codec seam is genuinely pluggable: same
+    dict-per-row contract as fake_decode_meta, driven through the
+    identical extract_meta mapInPandas harness. Other payloads (FLAC, MP3
+    etc.) raise, same as decode_image."""
     import io
     import wave as _wave
 
-    if content.startswith(b"fLaC"):
-        from .flac_codec import decode_flac
-
-        fl = decode_flac(content)
-        rate = fl["frame_rate"]
-        return {
-            "n_bytes": len(content),
-            "fmt": "flac",
-            "n_channels": fl["n_channels"],
-            "sample_width": fl["sample_width"],
-            "frame_rate": rate,
-            "n_frames": fl["n_frames"],
-            "duration_ms": (fl["n_frames"] * 1000) // rate if rate else 0,
-        }
     if not content.startswith(b"RIFF"):
         raise NotImplementedError(
-            "only PCM WAV and FLAC decodable in this environment "
-            "(stdlib wave; flac_codec.py)"
+            "only PCM WAV decodable in this environment (stdlib wave)"
         )
     with _wave.open(io.BytesIO(content)) as w:
         n_frames = w.getnframes()

@@ -50,14 +50,6 @@ def read_schemas(df: DataFrame) -> str:
     )
 
 
-def count_occurrences(df: DataFrame, token: str) -> int:
-    return plan_text(df).count(token)
-
-
-def has_broadcast_join(df: DataFrame) -> bool:
-    return "BroadcastHashJoin" in plan_text(df)
-
-
 def shuffle_count(df: DataFrame) -> int:
     """Number of exchange (shuffle) operators in the physical plan."""
     text = plan_text(df)

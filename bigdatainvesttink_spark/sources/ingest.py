@@ -106,23 +106,6 @@ def dispatch(raw: DataFrame, value_col: str = "value") -> dict[str, DataFrame]:
     return routed
 
 
-def parse_valid(value: Column, table: str) -> tuple[Column, Column]:
-    """(parsed struct, is-valid) for one raw JSON value against a table's
-    wire schema — the single-expression form of dispatch+validate, usable
-    inside CASE chains for one-pass routing/counting."""
-    parsed = F.from_json(value, wire_schema(table))
-    ok = None
-    for c in REQUIRED_FIELDS[table]:
-        cond = parsed.getField(c).isNotNull()
-        ok = cond if ok is None else (ok & cond)
-    ts_col = TS_COLS[table]
-    if ts_col is not None:
-        ok = ok & F.try_to_timestamp(
-            parsed.getField(ts_col), F.lit(TS_FORMAT)
-        ).isNotNull()
-    return parsed, ok
-
-
 def validate(parsed: DataFrame, table: str) -> tuple[DataFrame, DataFrame]:
     """Presence validation + timestamp parse (A14, A15).
 
