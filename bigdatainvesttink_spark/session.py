@@ -10,7 +10,8 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Runtime-settable confs the engine depends on.
+# Runtime-settable confs that results depend on; configure() raises when
+# one does not hold.
 #
 # nanosAsLong: the driver fixtures' events.parquet carries
 # INT64 TIMESTAMP(NANOS), which Spark's parquet reader rejects by default;
@@ -20,9 +21,14 @@ from pyspark.sql import SparkSession
 #
 # session.timeZone=UTC: oracle comparison — DuckDB timestamps are naive;
 # pinning UTC makes Spark's timestamp<->string/ntz conversions agree.
-_RUNTIME_CONFS = {
+_CORRECTNESS_CONFS = {
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     "spark.sql.session.timeZone": "UTC",
+}
+
+# Confs that only change speed: a deployment that forbids setting one runs
+# slower, not wrong, so configure() proceeds without it.
+_TUNING_CONFS = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
@@ -57,8 +63,22 @@ _SCRATCH_ROOT: str | None = None
 
 
 def configure(spark: SparkSession) -> SparkSession:
-    """Apply engine confs to an existing session (idempotent)."""
-    confs = dict(_RUNTIME_CONFS)
+    """Apply engine confs to an existing session (idempotent).
+
+    Raises RuntimeError when a correctness conf cannot be set or does not
+    read back as set: results would silently stop matching the oracles.
+    """
+    for k, v in _CORRECTNESS_CONFS.items():
+        try:
+            spark.conf.set(k, v)
+        except Exception as exc:
+            raise RuntimeError(f"cannot set correctness conf {k}={v}") from exc
+        got = spark.conf.get(k)
+        if got != v:
+            raise RuntimeError(
+                f"correctness conf {k} reads {got!r} after setting {v!r}"
+            )
+    confs = dict(_TUNING_CONFS)
     # Driver-owned sessions ship the 200-partition default — wrong for both
     # tiny fixtures (over-parallelized; streaming aggs don't AQE-coalesce)
     # and local bench runs. Size to the harness CPU budget.
@@ -69,6 +89,20 @@ def configure(spark: SparkSession) -> SparkSession:
         except Exception:
             pass  # non-settable in this deployment; proceed with defaults
     return spark
+
+
+def driver_memory() -> str:
+    """``spark.driver.memory`` for sessions this package builds.
+
+    ``SPARK_DRIVER_MEM`` (a deployment setting) wins; otherwise half of
+    physical RAM, capped at 48g. A fixed 48g let the heap outgrow a 16 GB
+    host until the kernel's OOM killer took the JVM mid-suite.
+    """
+    raw = os.environ.get("SPARK_DRIVER_MEM")
+    if raw:
+        return raw
+    half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2 // 2**20
+    return f"{min(48 * 1024, half_mb)}m"
 
 
 def _reliable_checkpoint(sc) -> bool:
@@ -144,7 +178,7 @@ def get_spark(app_name: str = "bigdatainvesttink-spark") -> SparkSession:
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
     )

@@ -7,7 +7,7 @@ from __future__ import annotations
 import datetime as dt
 import math
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from pyspark.sql import functions as F
@@ -355,13 +355,15 @@ def test_twap_weights_sum_to_span(spark, rows):
     ),
     nparts=st.sampled_from([1, 2, 5, 32]),
 )
+@example(rows=[], nparts=2)
 @settings(**_SETTINGS)
 def test_two_phase_global_rank_matches_single_sort(spark, rows, nparts):
     """functions/distributed_rank.with_global_row_number must be
     bit-identical to the single-partition row_number window under any
     total order, for any partition count — including duplicates in the
-    primary sort key (the id column breaks ties) and partition counts
-    larger than the row count (empty range partitions)."""
+    primary sort key (the id column breaks ties), partition counts
+    larger than the row count (empty range partitions) and an empty
+    input (no partition offsets at all)."""
     from pyspark.sql.window import Window
 
     from bigdatainvesttink_spark.functions.distributed_rank import (

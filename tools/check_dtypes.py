@@ -9,9 +9,10 @@ any per-column dtype mismatch, plus columns whose values are list-like
 
 Empirically (CORRECTNESS_r01-r03), only the int64-vs-float64 signature flips
 the driver's value hash; int32-vs-int64, int8, and ns-vs-us timestamp repr
-all occur on driver-green queries. ``fatal_dtype_issues`` returns only the
-hash-flipping class and is what ``tests/test_oracle_dtypes.py`` gates on;
-the CLI still prints every mismatch for manual audits.
+all occur on driver-green queries. ``dtype_issues`` reports that
+hash-flipping class separately, and ``tests/test_queries.py`` gates on it
+for every oracled query; the CLI still prints every mismatch for manual
+audits.
 
 Usage: python tools/check_dtypes.py [sf_dir] [name_filter ...]
 """
@@ -23,30 +24,16 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import duckdb  # noqa: E402
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
+from tools.check_oracle import duck_con  # noqa: E402
 
 # The one dtype pair that flips the driver's value hash (DuckDB HUGEINT ->
 # pandas float64 vs Spark int64), in either direction.
 _FATAL_PAIRS = {("int64", "float64"), ("float64", "int64")}
 
 
-def duck_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{sf_dir}/{t}.parquet')"
-        )
-    return con
-
-
-def audit_query(spark, con, name, fn, sql, sf_dir):
-    """Return (all_issues, fatal_issues) for one query, or raise."""
-    spdf = fn(spark, sf_dir).limit(2000).toPandas()
+def dtype_issues(df, con, sql):
+    """Return (all_issues, fatal_issues) for a built query frame, or raise."""
+    spdf = df.limit(2000).toPandas()
     dkdf = con.execute(f"SELECT * FROM ({sql}) q LIMIT 2000").df()
     issues, fatal = [], []
     sp_cols = {c.lower(): c for c in spdf.columns}
@@ -74,32 +61,6 @@ def audit_query(spark, con, name, fn, sql, sf_dir):
     return issues, fatal
 
 
-def fatal_dtype_issues(spark, sf_dir, filters=()):
-    """Run the audit across all oracled queries; return {name: [fatal...]}.
-
-    Errors raised by a query are reported as fatal too — a query that can't
-    produce a pandas frame can't produce a driver hash either.
-    """
-    import __spark_entry__ as entrymod
-
-    con = duck_con(sf_dir)
-    qs = entrymod.queries()
-    oracles = entrymod.oracle_sql()
-    out = {}
-    for name, fn in qs.items():
-        if filters and not any(f in name for f in filters):
-            continue
-        if name not in oracles:
-            continue
-        try:
-            _, fatal = audit_query(spark, con, name, fn, oracles[name], sf_dir)
-        except Exception as exc:  # noqa: BLE001
-            fatal = [f"ERR {type(exc).__name__}: {exc}"]
-        if fatal:
-            out[name] = fatal
-    return out
-
-
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     filters = sys.argv[2:]
@@ -120,9 +81,7 @@ def main() -> None:
             n_skip += 1
             continue
         try:
-            issues, fatal = audit_query(
-                spark, con, name, fn, oracles[name], sf_dir
-            )
+            issues, fatal = dtype_issues(fn(spark, sf_dir), con, oracles[name])
         except Exception as exc:  # noqa: BLE001
             print(f"ERR  {name}: {type(exc).__name__}: {exc}")
             n_bad += 1

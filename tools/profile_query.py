@@ -36,7 +36,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     names = sys.argv[1:]
 
-    from bigdatainvesttink_spark.session import configure
+    from bigdatainvesttink_spark.session import configure, driver_memory
     from pyspark.sql import SparkSession
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -44,7 +44,7 @@ def main() -> None:
         SparkSession.builder.master(f"local[{cpus}]")
         .appName("profile")
         .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "true")
         .config("spark.ui.retainedJobs", "5000")
         .config("spark.ui.retainedStages", "5000")
