@@ -1,19 +1,21 @@
 """One exact check per registered query.
 
-Each query is built once at sf0.01 and that one frame goes through every
-per-query gate:
+``test_query_nonempty_sf001`` builds each query once at sf0.01 and that one
+frame goes through every per-query gate:
 
 1. the anti-pattern scan of its plan (``tools/scan_antipatterns.plan_flags``),
    before anything executes it;
 2. the exact DuckDB oracle diff (``tools/check_oracle.compare``: schema, row
    count and order-insensitive values), plus a non-empty oracle result, since
    an empty-vs-empty diff passes silently (how tpch_q10's original 1993 date
-   filter slipped through);
+   filter slipped through); with the diff passed, Spark's result is non-empty
+   too;
 3. the hash-fatal dtype check against the same oracle SQL
    (``tools/check_dtypes.dtype_issues``).
 
-``compare`` is the gate every case rests on, so its own reports are pinned
-on tiny frames at the bottom of this file.
+The salted stream-stream joins get the same check at sf0.001, and
+``compare``, the gate every case rests on, has its own reports pinned on
+tiny frames at the bottom of this file.
 """
 
 from __future__ import annotations
@@ -61,7 +63,7 @@ def _check(spark, name, sf_dir):
 
 
 @pytest.mark.parametrize("name", sorted(entrymod.queries()))
-def test_query(spark, name):
+def test_query_nonempty_sf001(spark, name):
     _check(spark, name, SF)
 
 

@@ -1,12 +1,16 @@
-"""Relational-core operator tests: the driver-contract entry points,
+"""Relational-core operator tests: the driver-contract entry points, every
+query built and run at sf0.001 with its plan scanned for anti-patterns,
 targeted semantics on sf0.001, and a plan audit that the flagship's
 filter/pruning reach the parquet scan. Every query's exact oracle diff runs
-in tests/test_queries.py."""
+at sf0.01 in tests/test_nonempty.py."""
 
 from __future__ import annotations
 
+import pytest
+
 import __spark_entry__ as entrymod
 from tests.conftest import SF_SMALL
+from tools.scan_antipatterns import plan_flags
 
 
 def test_entry_smoke(spark):
@@ -21,6 +25,17 @@ def test_queries_have_oracles(spark):
     assert qs, "no queries registered"
     missing = set(oracles) - set(qs)
     assert not missing, f"oracles without queries: {missing}"
+
+
+@pytest.mark.parametrize("name", sorted(entrymod.queries()))
+def test_query_runs_sf0001(spark, name):
+    # sf0.001 is small enough to change plans and branches (15 companies
+    # salt the stream-stream joins), so the plan scan runs here too
+    spark.catalog.clearCache()
+    df = entrymod.queries()[name](spark, SF_SMALL)
+    flags = plan_flags(name, df)
+    assert not flags, f"anti-pattern flags: {'; '.join(flags)}"
+    assert df.count() >= 0
 
 
 def test_flagship_plan_pushdown(spark):

@@ -10,7 +10,7 @@ any per-column dtype mismatch, plus columns whose values are list-like
 Empirically (CORRECTNESS_r01-r03), only the int64-vs-float64 signature flips
 the driver's value hash; int32-vs-int64, int8, and ns-vs-us timestamp repr
 all occur on driver-green queries. ``dtype_issues`` reports that
-hash-flipping class separately, and ``tests/test_queries.py`` gates on it
+hash-flipping class separately, and ``tests/test_nonempty.py`` gates on it
 for every oracled query; the CLI still prints every mismatch for manual
 audits.
 

@@ -17,8 +17,9 @@ by hand; this makes the scan mechanical):
 Queries whose builders are eager (streaming drives, iterative collects)
 execute while being built — that is expected; the scan still audits the
 returned frame's plan. ``plan_flags`` audits one built frame;
-``tests/test_queries.py`` asserts it is empty for every query, and the CLI
-prints a report over the registry.
+``tests/test_nonempty.py`` (sf0.01) and ``tests/test_relational.py``
+(sf0.001) assert it is empty for every query, and the CLI prints a report
+over the registry.
 
 Usage: python tools/scan_antipatterns.py [sf_dir] [name_filter ...]
 """
