@@ -53,6 +53,9 @@ def main() -> None:
     load_before = [round(x, 2) for x in os.getloadavg()]
 
     spark = get_spark("bench")
+    # The effective core count: the suite wall only compares across hosts
+    # with it alongside.
+    cpus = spark.sparkContext.defaultParallelism
     qs = entrymod.queries()
 
     # Warm-up: JVM, codegen, parquet footer caches.
@@ -149,6 +152,7 @@ def main() -> None:
         "family_medians": family_medians,
         "loadavg_before": load_before,
         "loadavg_after": load_after,
+        "cpus": cpus,
     }
     with open(os.path.join(REPO, "BENCH_DETAIL.json"), "w") as f:
         json.dump(detail, f, indent=1, sort_keys=True)
@@ -170,6 +174,7 @@ def main() -> None:
             "n_queries": len(timings),
             "loadavg_before": load_before,
             "loadavg_after": load_after,
+            "cpus": cpus,
             "detail": "BENCH_DETAIL.json",
         },
         separators=(",", ":"),

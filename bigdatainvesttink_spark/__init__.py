@@ -19,4 +19,9 @@ Design tenets (see SURVEY.md §7):
     through exact decimal arithmetic so sums are order-independent.
 """
 
+import logging
+
 __version__ = "0.1.0"
+
+# The package's one logger; modules log through it, never print.
+LOG = logging.getLogger(__name__)

@@ -26,15 +26,12 @@ Scale notes:
 
 from __future__ import annotations
 
-import logging
-
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import LOG
 from ..io import load_table
 from ..registry import query
-
-_LOG = logging.getLogger(__name__)
 
 _W_FORMULA = "((p*64 + d + 1) * 2654435761) % 2001 - 1000"  # plane weights
 
@@ -79,7 +76,7 @@ def _bounded_broadcast(df: DataFrame, est_rows: int | None,
     import os
 
     if est_rows is None:
-        _LOG.warning(
+        LOG.warning(
             "bounded-broadcast statistic unavailable (footer unreadable); "
             "dropping the broadcast hint — AQE decides at runtime"
         )

@@ -10,6 +10,12 @@ import os
 
 from pyspark.sql import SparkSession
 
+from . import LOG
+
+# The directory that holds the package. Python workers import it from here
+# when they unpickle a UDF that references package code.
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 # Runtime-settable confs that results depend on; configure() raises when
 # one does not hold.
 #
@@ -27,7 +33,7 @@ _CORRECTNESS_CONFS = {
 }
 
 # Confs that only change speed: a deployment that forbids setting one runs
-# slower, not wrong, so configure() proceeds without it.
+# slower, not wrong, so configure() logs it and proceeds without it.
 _TUNING_CONFS = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
@@ -67,6 +73,12 @@ def configure(spark: SparkSession) -> SparkSession:
 
     Raises RuntimeError when a correctness conf cannot be set or does not
     read back as set: results would silently stop matching the oracles.
+    A tuning conf that cannot be set is logged and skipped.
+
+    Also puts the package root on the Python workers' ``PYTHONPATH``: a
+    worker imports the package when it unpickles a UDF, and without this it
+    can only find it when the caller's working directory or ``PYTHONPATH``
+    happens to name the repo.
     """
     for k, v in _CORRECTNESS_CONFS.items():
         try:
@@ -86,8 +98,12 @@ def configure(spark: SparkSession) -> SparkSession:
     for k, v in confs.items():
         try:
             spark.conf.set(k, v)
-        except Exception:
-            pass  # non-settable in this deployment; proceed with defaults
+        except Exception as exc:
+            LOG.warning("tuning conf %s=%s not set, running without it: %s", k, v, exc)
+    env = spark.sparkContext.environment
+    paths = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if _PACKAGE_ROOT not in paths:
+        env["PYTHONPATH"] = os.pathsep.join(paths + [_PACKAGE_ROOT])
     return spark
 
 

@@ -22,6 +22,8 @@ at 100 TB it's embarrassingly parallel: no shuffle anywhere in the path.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -52,8 +54,10 @@ def parse_once(expr: Column) -> Column:
     replacement: ``shuffle`` is genuinely nondeterministic, no rule
     simplifies the singleton case, and shuffling a 1-element array is the
     identity, so the wrapped value is bit-identical while Catalyst can
-    neither inline nor push through it. Plan-pinned by
-    tests/test_ingest.py::test_ingest_parses_once.
+    neither inline nor push through it. ``ingest`` spells the same wrap in
+    SQL text (``_branch_sql``). Plan-pinned by
+    tests/test_ingest.py::test_ingest_parses_once and
+    ::test_dispatch_parses_once.
     """
     return F.element_at(F.shuffle(F.array(expr)), 1)
 
@@ -139,6 +143,60 @@ def validate(parsed: DataFrame, table: str) -> tuple[DataFrame, DataFrame]:
     return valid, rejected
 
 
+def _q(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
+@functools.lru_cache
+def _branch_sql(value_col: str) -> tuple[tuple, ...]:
+    """Per table: (table, routing predicate, parse projection, timestamp
+    projection or None, validity predicate, output projection) as SQL text.
+
+    The text spells exactly the expressions the Column API would build
+    (``dispatch`` + ``validate`` fused, behind ``parse_once``), so the
+    analyzed plan is the same; only the Python side is cheaper, because a
+    SQL string crosses py4j once where a Column tree makes one round trip
+    per function call.
+    """
+    v = _q(value_col)
+    branches = []
+    earlier: str | None = None
+    for marker, table in DISPATCH_MARKERS.items():
+        has_key = f"coalesce(array_contains(json_object_keys({v}), '{marker}'), false)"
+        cond = has_key if earlier is None else f"(NOT ({earlier})) AND {has_key}"
+        earlier = has_key if earlier is None else f"({earlier}) OR {has_key}"
+        wire = wire_schema(table)
+        parse = (
+            f"element_at(shuffle(array(from_json({v}, '{wire.simpleString()}'))), 1)"
+            " AS __p"
+        )
+        ts_col = TS_COLS[table]
+        ok = [f"__p.{_q(c)} IS NOT NULL" for c in REQUIRED_FIELDS[table]]
+        typed = None
+        if ts_col is not None:
+            typed = (
+                "__p",
+                f"CAST(try_to_timestamp(__p.{_q(ts_col)}, '{TS_FORMAT}')"
+                " AS TIMESTAMP_NTZ) AS __ts",
+            )
+            ok.append("__ts IS NOT NULL")
+        final = tuple(
+            f"__ts AS {_q(f.name)}" if f.name == ts_col
+            else f"__p.{_q(f.name)} AS {_q(f.name)}"
+            for f in wire.fields
+        )
+        # Left-nested like the Column API's ``a & b & c``; the SQL parser
+        # balances a flat AND chain, which would change the plan's shape.
+        valid = ok[0]
+        for x in ok[1:]:
+            valid = f"({valid}) AND {x}"
+        branches.append((table, cond, parse, typed, valid, final))
+    return tuple(branches)
+
+
+_branch_sql("value")  # the wire's column, built once at import
+
+
 def ingest(raw: DataFrame, value_col: str = "value") -> dict[str, DataFrame]:
     """Full consumer path over a mixed JSON stream: parse -> dispatch ->
     validate -> timestamp parse. {table: clean typed DataFrame} matching
@@ -151,58 +209,30 @@ def ingest(raw: DataFrame, value_col: str = "value") -> dict[str, DataFrame]:
     replay is built on that property; a future stateful behavior here must
     revisit that query (and the test will fail loudly).
 
-    Semantically identical to ``validate(dispatch(raw)[t], t)`` but built as
-    a SINGLE-PARSE plan. The naive composition costs 3-8 ``from_json`` per
-    row: predicate pushdown inlines the parsed-struct alias into every
+    Row for row equal to ``validate(dispatch(raw)[t], t)[0]`` (pinned by
+    tests/test_ingest.py::test_ingest_matches_dispatch_validate) but built
+    as a SINGLE-PARSE plan. The naive composition costs 3-8 ``from_json``
+    per row: predicate pushdown inlines the parsed-struct alias into every
     filter it pushes through, so each Filter re-parses (and, on the
-    fixture's simulated wire, re-SERIALIZES) the message. The fix is to
-    make the parsed struct itself non-deterministic (``parse_once``):
+    fixture's simulated wire, re-SERIALIZES) the message. The parsed
+    struct is therefore wrapped non-deterministically (``parse_once``):
     Catalyst neither inlines a non-deterministic alias into downstream
     predicates nor pushes predicates through a projection containing one,
-    and (unlike a detached non-deterministic marker column) the guard
-    can't be undone by column pruning because it wraps a column every
-    consumer references. Routing filters stay below the parse (on the raw
-    string), so each branch fully parses only its own rows.
+    and the guard can't be undone by column pruning because it wraps a
+    column every consumer references. Routing filters stay below the parse
+    (on the raw string), so each branch fully parses only its own rows.
+
+    Each branch is built from SQL text (``_branch_sql``), not Column
+    functions: the Column form cost ~2,900 py4j round trips per call
+    (0.32 s on 4 cores, paid on every streaming micro-batch), the text
+    form a few dozen (0.07 s).
     """
     out: dict[str, DataFrame] = {}
-    earlier: Column | None = None
-    for marker, table in DISPATCH_MARKERS.items():
-        keys = F.json_object_keys(F.col(value_col))
-        has_key = F.coalesce(F.array_contains(keys, F.lit(marker)), F.lit(False))
-        cond = has_key if earlier is None else (~earlier & has_key)
-        earlier = has_key if earlier is None else (earlier | has_key)
-        parsed = F.from_json(F.col(value_col), wire_schema(table))
-        # Non-deterministic identity wrap == optimizer barrier. r10 fix:
-        # the when(rand() >= -1) guard this shipped with is STRIPPED by
-        # the Spark 4.1 optimizer (the validity filter then re-parsed the
-        # message ~6x per row below the exchange, on one task); see
-        # parse_once for the measured story.
-        guarded = parse_once(parsed)
-        p1 = raw.filter(cond).select(guarded.alias("__p"))
-        ts_col = TS_COLS[table]
-        if ts_col is not None:
-            p2 = p1.select(
-                "__p",
-                F.try_to_timestamp(
-                    F.col("__p").getField(ts_col), F.lit(TS_FORMAT)
-                )
-                .cast("timestamp_ntz")
-                .alias("__ts"),
-            )
-        else:
-            p2 = p1
-        ok = None
-        for c in REQUIRED_FIELDS[table]:
-            x = F.col("__p").getField(c).isNotNull()
-            ok = x if ok is None else (ok & x)
-        if ts_col is not None:
-            ok = ok & F.col("__ts").isNotNull()
-        field_names = [f.name for f in wire_schema(table).fields]
-        final_cols = [
-            F.col("__ts").alias(c) if c == ts_col else F.col("__p").getField(c).alias(c)
-            for c in field_names
-        ]
-        out[table] = p2.filter(ok).select(*final_cols)
+    for table, cond, parse, typed, ok, final in _branch_sql(value_col):
+        p = raw.filter(cond).selectExpr(parse)
+        if typed is not None:
+            p = p.selectExpr(*typed)
+        out[table] = p.filter(ok).selectExpr(*final)
     return out
 
 

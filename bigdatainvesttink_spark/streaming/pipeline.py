@@ -28,7 +28,9 @@ from __future__ import annotations
 
 import threading
 import uuid
+from concurrent.futures import ThreadPoolExecutor, as_completed
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -360,23 +362,43 @@ def ingest_stream(
     """The consumer pipeline (E2) as a streaming job: JSON-lines files ->
     parse/dispatch/validate (sources/ingest.py) -> per-table parquet append
     via foreachBatch, exactly-once under the checkpoint. Returns the query.
+
+    Each micro-batch lands its four tables concurrently, one single-task
+    write job per table. There is no empty-batch probe: an availableNow
+    drive only runs a batch when new files arrived, and a batch of empty
+    files lands no rows. The first failed write fails the epoch, so the
+    batch is not committed.
     """
     reader = spark.readStream
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     raw = reader.format("text").load(source_dir)
 
+    def append(clean: DataFrame, path: str) -> None:
+        clean.coalesce(1).write.mode("append").parquet(path)
+
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():  # A17 empty-batch short-circuit
-            return
         # ingest() fans one dispatch branch per table over the batch, and
         # each branch's write re-scans the micro-batch source — pin the
         # batch for the epoch so the wire text is read once per trigger,
         # not once per table (§5; dropped before the epoch returns).
         batch_df = batch_df.persist()
         try:
-            for table, clean in ingest(batch_df).items():
-                clean.write.mode("append").parquet(f"{out_dir}/{table}")
+            clean = ingest(batch_df)
+            # Wrapping per task hands each pool thread its own copy of this
+            # thread's local properties (the query's job group, any caller
+            # tags), so the writes stay attributed to and cancellable with
+            # the streaming query.
+            with ThreadPoolExecutor(len(clean)) as pool:
+                writes = [
+                    pool.submit(
+                        inheritable_thread_target(batch_df.sparkSession)(append),
+                        df, f"{out_dir}/{table}",
+                    )
+                    for table, df in clean.items()
+                ]
+                for done in as_completed(writes):
+                    done.result()
         finally:
             batch_df.unpersist()
 

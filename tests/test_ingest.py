@@ -6,6 +6,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from bigdatainvesttink_spark.functions import quotation_to_double
+from bigdatainvesttink_spark.schemas import DOMAIN_SCHEMAS
 from bigdatainvesttink_spark.sources.ingest import dispatch, ingest, validate
 
 VALID = {
@@ -158,3 +159,29 @@ def test_dispatch_parses_once(spark):
                 "== Physical Plan =="
             )[-1]
             assert phys.count("from_json") == 1, (table, phys)
+
+
+def test_ingest_matches_dispatch_validate(spark):
+    """ingest() is built from SQL text for speed; it must stay row for row
+    the Column-API composition validate(dispatch(raw)[t], t)[0], with the
+    domain schema, over every edge the consumer drops or routes."""
+    msgs = list(VALID.values()) + [
+        "{{{not json",  # malformed
+        "",  # empty
+        '"quoted string"',
+        '{"company_id":"F1","foo":1}',  # unknown marker
+        '{"side":null,"company_id":"F1"}',  # null marker value
+        '{"company_id":"F1","timestamp":"2024-01-01 10:00:01",'
+        '"price":1.25,"side":"buy"}',  # missing required field
+        '{"company_id":"F1","timestamp":"01/01/2024 10:00",'
+        '"price":1.25,"volume":7,"side":"buy"}',  # bad timestamp
+        '{"open":1.0,"high":2.0,"low":0.5,"close":1.5,"volume":1,"side":"buy",'
+        '"company_id":"F2","timestamp":"2024-01-01 00:00:00"}',  # two markers
+        '{"name":"Co2","company_id":"F2","ticker":null,"sector":"S"}',
+    ]
+    raw = _raw(spark, msgs)
+    routed = dispatch(raw)
+    for table, df in ingest(raw).items():
+        assert df.schema == DOMAIN_SCHEMAS[table], table
+        want = validate(routed[table], table)[0]
+        assert sorted(map(tuple, df.collect())) == sorted(map(tuple, want.collect())), table

@@ -10,8 +10,10 @@ import uuid
 
 import pytest
 
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
+from bigdatainvesttink_spark.schemas import DOMAIN_SCHEMAS
 from bigdatainvesttink_spark.streaming.pipeline import (
     events_stream,
     ingest_stream,
@@ -55,6 +57,38 @@ def test_ingest_stream_checkpoint_restart(spark, tmp_path):
     assert got.count() == 25  # 10 + 15, wave1 NOT reprocessed, bad line dropped
     assert got.select("company_id").distinct().count() == 3
 
+
+def test_ingest_stream_empty_files_commit(spark, tmp_path):
+    """A drive over zero-byte files runs its batch without an empty-batch
+    probe: it lands no rows, raises nothing and commits the batch."""
+    src = tmp_path / "src"
+    src.mkdir()
+    for name in ("a.jsonl", "b.jsonl"):
+        (src / name).write_text("")
+    ckpt, out = str(tmp_path / "ckpt"), str(tmp_path / "out")
+    q = ingest_stream(spark, str(src), ckpt, out)
+    q.awaitTermination()
+    assert q.exception() is None
+    assert (tmp_path / "ckpt" / "commits" / "0").exists()
+    for table, schema in DOMAIN_SCHEMAS.items():
+        assert spark.read.schema(schema).parquet(f"{out}/{table}").count() == 0
+
+
+def test_ingest_stream_write_error_fails_epoch(spark, tmp_path):
+    """The four tables land concurrently; one failed write must still fail
+    the epoch: the error reaches q.exception() and the batch stays
+    uncommitted, so a restart replays it."""
+    src = tmp_path / "src"
+    src.mkdir()
+    (src / "w.jsonl").write_text("\n".join(_trade(i, i) for i in range(5)))
+    out = tmp_path / "out"
+    out.mkdir()
+    (out / "trades").write_text("a file where the trades directory belongs")
+    q = ingest_stream(spark, str(src), str(tmp_path / "ckpt"), str(out))
+    with pytest.raises(StreamingQueryException):
+        q.awaitTermination()
+    assert q.exception() is not None
+    assert not (tmp_path / "ckpt" / "commits" / "0").exists()
 
 def test_watermark_drops_late_rows(spark, tmp_path):
     """C4: with a watermark, an event far behind the stream's max event time
