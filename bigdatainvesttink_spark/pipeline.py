@@ -7,9 +7,11 @@ Reference parity, stage by stage:
      derived from the events fixture (standing in for the Tinkoff API) and
      published as JSON-lines files — the durable-queue stand-in.
   2. CONSUME (E2, from_rabbitmq_to_clickhouse.py:142-177): a checkpointed
-     Structured Streaming job parses, dispatches, validates, and appends
-     each table to the parquet warehouse (ClickHouse's role). Exactly-once
-     via checkpoint — a strict upgrade over the reference's ack-after-insert.
+     Structured Streaming job parses, dispatches, validates, and lands
+     each table to the parquet warehouse (ClickHouse's role), one
+     overwritten directory per micro-batch. Exactly-once via checkpoint plus
+     replay-safe landing — a strict upgrade over the reference's
+     ack-after-insert.
   3. QUERY (E3, Grafana's role): the warehouse tables feed the B-series
      analytics as plain DataFrames / temp views.
 
@@ -50,7 +52,10 @@ def consume(spark: SparkSession, queue_dir: str, checkpoint: str, warehouse: str
 
 
 def warehouse_table(spark: SparkSession, warehouse: str, table: str) -> DataFrame:
-    return spark.read.parquet(f"{warehouse}/{table}")
+    """One warehouse table in its domain schema, without the ``epoch``
+    column the per-micro-batch directories add."""
+    df = spark.read.parquet(f"{warehouse}/{table}")
+    return df.select(*DOMAIN_SCHEMAS[table].names)
 
 
 def run_pipeline(

@@ -5,9 +5,10 @@ Mapping from the reference:
   * run-forever per-message consume (from_rabbitmq_to_clickhouse.py:194-197)
     -> readStream + trigger; micro-batches replace callbacks (C1);
   * at-least-once ack-after-insert (:173,194) -> checkpointLocation +
-    foreachBatch (C2) — the file-sink path is exactly-once, a strict
-    upgrade over the reference (which can double-insert between insert and
-    ack);
+    foreachBatch (C2) — every sink lands each micro-batch in its own
+    overwritten epoch directory (``_land_epoch``), so a replayed batch
+    lands once: exactly-once, a strict upgrade over the reference (which
+    can double-insert between insert and ack);
   * durable queues (from_parser_to_rabbitmq.py:259-266) -> source offsets in
     the checkpoint (C3) — restart resumes, verified in tests;
   * NO watermark in the reference (C4): every late row was inserted
@@ -26,9 +27,11 @@ exercise (restart, late data, session merge).
 
 from __future__ import annotations
 
+import os
 import threading
 import uuid
 from concurrent.futures import ThreadPoolExecutor, as_completed
+from contextlib import contextmanager
 
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -36,7 +39,7 @@ from pyspark.sql import functions as F
 
 from ..fixtures import oracle_on_domain
 from ..functions.text import MINHASH_PRIME, N_MINHASHES
-from ..io import load_table
+from ..io import normalize_events_ts
 from ..operators.dedup import _oracle as _dedup_oracle
 from ..registry import query
 from ..session import configure, scratch_dir
@@ -57,11 +60,7 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
-    if dict(batch.dtypes).get("ts") == "bigint":
-        raw = raw.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000")).cast("timestamp_ntz")
-        )
-    return raw
+    return normalize_events_ts(raw)
 
 
 # Stateful-operator partition count: every state-store partition carries
@@ -71,79 +70,37 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 # time vs 32 with identical results. Production raises this with state
 # volume (it is baked into the checkpoint on first run, as Spark pins
 # state partitioning for a query's lifetime).
-import os
-
 STREAM_STATE_PARTITIONS = int(
     os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "8")
 )
 
 
-def _stream_state_partitions(
-    n_keys: int | None = None, n_salts: int = 1
-) -> int:
+def _stream_state_partitions(n_keys: int | None = None) -> int:
     """State-store partition count for a stateful drive, derived from the
-    observed key/salt domain when the caller knows it (VERDICT r10 ask #4).
+    observed key count when the caller knows it.
 
     Every state partition pays fixed per-micro-batch overhead (store
-    instantiation, commit, snapshot), so the honest sizing statistic is
-    how many (key, salt) groups there are to spread: ~8 sub-keys per
-    partition (the balance point of the r7 10x salt sweep), floored at 1,
-    capped at the harness core budget — a key domain smaller than
-    8 x partitions leaves stores near-empty (pure overhead at sf0.1, real
-    straggler waste at 100 TB), while a domain past 8 x cores earns every
-    core a store. The env override always wins (production sizes to state
-    VOLUME, which only the deployment knows); callers with no key
-    statistic keep the static default."""
+    instantiation, commit, snapshot), so the sizing statistic is how many
+    keys there are to spread: ~8 keys per partition, floored at 1, capped
+    at the harness core budget — a key domain smaller than 8 x partitions
+    leaves stores near-empty (pure overhead at sf0.1, real straggler waste
+    at 100 TB), while a domain past 8 x cores earns every core a store.
+    The env override always wins (production sizes to state VOLUME, which
+    only the deployment knows); callers with no key statistic keep the
+    static default."""
     raw = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS")
     if raw is not None:
         return int(raw)
     if not n_keys or n_keys <= 0:
         return STREAM_STATE_PARTITIONS
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", str(STREAM_STATE_PARTITIONS)))
-    target = max(1, (n_keys * n_salts + 7) // 8)
+    target = max(1, (n_keys + 7) // 8)
     # Round UP to a power of two before capping: measured A/B at sf0.1
     # (50 keys -> target 7) read 9.5-11.3 s vs 8.3 s at 8 partitions on
     # the headline interval join — sub-power-of-two counts left a longer
     # straggler tail in the state stages for zero overhead saved.
     pow2 = 1 << (target - 1).bit_length()
     return min(cpus, pow2)
-
-
-def _stream_join_salt(n_keys: int | None = None) -> int:
-    """Hot-key salt factor for stream-stream joins (read per call so the
-    scale harness and tests can set it per run).
-
-    Auto-sizing (VERDICT r7 ask #5): the 10x measurement proved salt=8
-    wins even on uniform keys whenever distinct join keys are FEW relative
-    to state partitions (50 keys vs 32 partitions: 450.7 s -> 274.0 s,
-    output content-hash identical) — with fewer keys than ~2x partitions,
-    hash placement leaves partitions idle while hot ones serialize. So
-    when the caller passes the observed key count and no env override is
-    set, the default becomes: OFF when keys >= 2 * STREAM_STATE_PARTITIONS
-    (placement already smooth), else the smallest power of two making
-    keys * n_salts >= 8 * partitions (>= ~8 sub-keys per partition — the
-    balance point the 10x sweep landed on: 50 keys x salt 8 = 400
-    sub-keys over 32 partitions), capped at 16 to bound build-side state
-    replication. SPARK_GRAFT_STREAM_JOIN_SALT always overrides."""
-    raw = os.environ.get("SPARK_GRAFT_STREAM_JOIN_SALT")
-    if raw is not None:
-        return int(raw)
-    if n_keys is None or n_keys <= 0:
-        return 1
-    partitions = STREAM_STATE_PARTITIONS
-    if n_keys >= 2 * partitions:
-        return 1
-    n = 1
-    while n_keys * n < 8 * partitions and n < 16:
-        n *= 2
-    return n
-
-
-def _stream_join_hot_keys() -> list[str]:
-    """Optional CSV of hot join keys to restrict salting to
-    (SPARK_GRAFT_STREAM_JOIN_HOT_KEYS); empty = salt every key."""
-    raw = os.environ.get("SPARK_GRAFT_STREAM_JOIN_HOT_KEYS", "")
-    return [k for k in raw.split(",") if k]
 
 
 def _neardup_index_broadcast_rows() -> int:
@@ -170,61 +127,28 @@ def _neardup_index_side(idx_sigs: DataFrame, est_index_rows: int) -> DataFrame:
     return idx_sigs
 
 
-def with_stream_join_salt(
-    probe: DataFrame,
-    build: DataFrame,
-    probe_key: str,
-    build_key: str,
-    n_salts: int,
-    hot_keys: list[str] | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """Split a skewed stream-stream join key into ``n_salts`` sub-buckets
-    (VERDICT r6 ask #3). Stream-stream join state is hash-partitioned by
-    the EQUALITY keys, so one hot instrument serializes onto one state
-    partition no matter how many partitions exist — the measured wall of
-    the 10x interval-join run (BENCH_SCALE.md). The probe side gets a
-    deterministic row-hash salt (``__t_salt``); the build side is
-    replicated once per salt (``__b_salt`` exploded 0..n-1), so every
-    probe row still meets every build row of its key EXACTLY ONCE and the
-    join output is bit-identical for any n_salts. Cost: build-side state
-    x n_salts (for the salted keys only, when ``hot_keys`` is given) —
-    the classic replicate-the-sparse-side skew trade.
-
-    Adding ``__t_salt == __b_salt`` to the join condition is what splits
-    the state: the (key, salt) pair becomes the partitioning key, so a
-    hot key's quadratic probe work spreads over n_salts state partitions.
-    """
-    probe_hot = (
-        F.col(probe_key).isin(hot_keys) if hot_keys else F.lit(True)
-    )
-    build_hot = (
-        F.col(build_key).isin(hot_keys) if hot_keys else F.lit(True)
-    )
-    salted_probe = probe.withColumn(
-        "__t_salt",
-        F.when(
-            probe_hot,
-            F.pmod(F.xxhash64(*probe.columns), F.lit(n_salts)).cast("int"),
-        ).otherwise(F.lit(0)),
-    )
-    salted_build = build.withColumn(
-        "__b_salt",
-        F.explode(
-            F.when(
-                build_hot, F.sequence(F.lit(0), F.lit(n_salts - 1))
-            ).otherwise(F.array(F.lit(0)))
-        ),
-    )
-    return salted_probe, salted_build
-
 # Serializes the shuffle-partition override below: spark.conf is
 # session-global, so without this lock a query planned concurrently on the
 # shared SparkSession would silently inherit the streaming setting
 # (ADVICE r3). The driver and pytest drive queries single-threaded, but the
-# lock makes concurrent run_to_memory calls safe too; callers planning
-# BATCH queries from other threads during a streaming drive should use a
-# separate spark.newSession() (own SQLConf, shared context).
+# lock makes concurrent drives safe too; callers planning BATCH queries
+# from other threads during a streaming drive should use a separate
+# spark.newSession() (own SQLConf, shared context).
 _SHUFFLE_OVERRIDE_LOCK = threading.Lock()
+
+
+@contextmanager
+def _shuffle_partitions(spark: SparkSession, n: int):
+    """Run a streaming drive with ``spark.sql.shuffle.partitions`` = ``n``
+    (the state-store partition count its checkpoint pins), restoring the
+    previous setting afterwards."""
+    with _SHUFFLE_OVERRIDE_LOCK:
+        prev = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.shuffle.partitions", str(n))
+        try:
+            yield
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def run_to_memory(
@@ -239,34 +163,53 @@ def run_to_memory(
     (append/update output) goes through :func:`run_to_scratch`."""
     name = name or f"mem_{uuid.uuid4().hex[:10]}"
     spark = sdf.sparkSession
-    with _SHUFFLE_OVERRIDE_LOCK:
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS)
+    # availableNow is synchronous, so the batch tail (aggregations over the
+    # landed memory table) runs under the restored setting.
+    with _shuffle_partitions(spark, STREAM_STATE_PARTITIONS):
+        q = (
+            sdf.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(output_mode)
+            .trigger(availableNow=True)
+            .start()
         )
-        try:
-            q = (
-                sdf.writeStream.format("memory")
-                .queryName(name)
-                .outputMode(output_mode)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        finally:
-            # availableNow is synchronous, so the batch tail (aggregations
-            # over the landed memory table) runs under the restored setting.
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+        q.awaitTermination()
     return spark.table(name)
 
 
-def _land_epoch(out: DataFrame, path: str, epoch_id: int) -> None:
-    """Land one micro-batch under its own epoch directory, overwriting any
-    prior delivery of the SAME epoch — the unit that makes run_to_scratch's
-    at-least-once foreachBatch sink effectively exactly-once (a replayed
-    epoch replaces its files rather than appending a second copy).
-    Module-level so the replay property is directly testable."""
-    out.write.mode("overwrite").parquet(f"{path}/e{epoch_id}")
+def _land_epoch(frames: dict[str, DataFrame], root: str, epoch_id: int) -> None:
+    """The one write every foreachBatch sink in this package makes: each
+    ``{table: frame}`` lands at ``<root>/<table>/epoch=<epoch_id>`` with
+    overwrite, all tables concurrently.
+
+    foreachBatch is at-least-once: a micro-batch re-delivered after a
+    failure arrives with the SAME epoch_id, and overwriting its directory
+    replaces the first delivery instead of appending a second copy — the
+    unit that makes every sink here effectively exactly-once. The
+    Hive-style name lets a plain ``spark.read.parquet(<root>/<table>)``
+    see every epoch, plus an int ``epoch`` column; readers with
+    ``recursiveFileLookup`` see only the data columns.
+
+    Wrapping each write hands its pool thread its own copy of this
+    thread's local properties (the query's job group, any caller tags), so
+    the jobs stay attributed to and cancellable with the streaming query.
+    The first failed write fails the epoch, so the batch is not committed.
+    """
+
+    def write(df: DataFrame, path: str) -> None:
+        df.write.mode("overwrite").parquet(path)
+
+    session = next(iter(frames.values())).sparkSession
+    with ThreadPoolExecutor(len(frames)) as pool:
+        writes = [
+            pool.submit(
+                inheritable_thread_target(session)(write),
+                df, f"{root}/{table}/epoch={epoch_id}",
+            )
+            for table, df in frames.items()
+        ]
+        for done in as_completed(writes):
+            done.result()
 
 
 def run_to_scratch(
@@ -283,29 +226,19 @@ def run_to_scratch(
     the stream emits per-event rows or join pairs (found empirically in
     the round-6 10x scale run — the stream-stream interval join's pair
     output OOM-pressured the driver). foreachBatch writes each
-    micro-batch to executor-side parquet instead; the returned frame
+    micro-batch to executor-side parquet instead, one epoch directory per
+    micro-batch (:func:`_land_epoch`, replay-safe); the returned frame
     reads the landed table from storage.
 
     ``batch_transform`` optionally maps each micro-batch DataFrame before
     landing — the map-side-combine hook: landing per-batch PARTIAL
     aggregates instead of raw rows collapses data-sized output to
     grid-sized storage while keeping associative folds (count/sum on
-    exact decimals) bit-identical after the final combine.
-
-    Landing is idempotent PER EPOCH: foreachBatch is at-least-once, so a
-    micro-batch re-delivered after a failure/retry arrives with the SAME
-    epoch_id — appending it to a flat table would double its partials
-    silently (the exact hazard merge_batch below documents for its
-    versioned state dirs). Each epoch therefore lands in its own
-    ``e{epoch_id}`` subdirectory with mode('overwrite'): a replay replaces
-    the epoch's files instead of duplicating them, and the read-back
-    globs the epoch dirs.
+    exact decimals) bit-identical after the final combine. It is also how
+    a batch operator runs per micro-batch (``c_stream_asof_enrich``).
     """
-    from ..session import scratch_dir
-
     spark = sdf.sparkSession
     root = scratch_dir("streamland-")
-    path = f"{root}/t"
     landed_schema = (
         batch_transform(
             spark.createDataFrame([], sdf.schema)
@@ -320,35 +253,28 @@ def run_to_scratch(
     # deserializing the full write spec and running the commit protocol)
     # per streaming query, pure fixed overhead at every scale (guide §1.2:
     # don't compute things you throw away).
-    os.makedirs(path, exist_ok=True)
+    os.makedirs(f"{root}/t", exist_ok=True)
 
     def _write(batch_df: DataFrame, epoch_id: int) -> None:
         out = batch_transform(batch_df) if batch_transform else batch_df
-        _land_epoch(out, path, epoch_id)
+        _land_epoch({"t": out}, root, epoch_id)
 
-    with _SHUFFLE_OVERRIDE_LOCK:
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(state_partitions or STREAM_STATE_PARTITIONS),
+    with _shuffle_partitions(spark, state_partitions or STREAM_STATE_PARTITIONS):
+        q = (
+            sdf.writeStream.foreachBatch(_write)
+            .outputMode(output_mode)
+            .option("checkpointLocation", f"{root}/ckpt")
+            .trigger(availableNow=True)
+            .start()
         )
-        try:
-            q = (
-                sdf.writeStream.foreachBatch(_write)
-                .outputMode(output_mode)
-                .option("checkpointLocation", f"{root}/ckpt")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+        q.awaitTermination()
     # recursive lookup over the concrete dir (not a glob): picks up every
-    # e{epoch} subdir without tripping the FileStreamSink metadata probe
+    # epoch dir without tripping the FileStreamSink metadata probe, and
+    # without adding the epoch partition column
     return (
         spark.read.schema(landed_schema)
         .option("recursiveFileLookup", "true")
-        .parquet(path)
+        .parquet(f"{root}/t")
     )
 
 
@@ -360,22 +286,20 @@ def ingest_stream(
     max_files_per_trigger: int | None = None,
 ):
     """The consumer pipeline (E2) as a streaming job: JSON-lines files ->
-    parse/dispatch/validate (sources/ingest.py) -> per-table parquet append
-    via foreachBatch, exactly-once under the checkpoint. Returns the query.
+    parse/dispatch/validate (sources/ingest.py) -> one parquet directory
+    per table and micro-batch, ``<out_dir>/<table>/epoch=<id>``. Returns
+    the query.
 
     Each micro-batch lands its four tables concurrently, one single-task
-    write job per table. There is no empty-batch probe: an availableNow
-    drive only runs a batch when new files arrived, and a batch of empty
-    files lands no rows. The first failed write fails the epoch, so the
-    batch is not committed.
+    write job per table. A replayed epoch overwrites its own directories,
+    so a batch that failed after some tables landed lands once on restart.
+    There is no empty-batch probe: an availableNow drive only runs a batch
+    when new files arrived, and a batch of empty files lands no rows.
     """
     reader = spark.readStream
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     raw = reader.format("text").load(source_dir)
-
-    def append(clean: DataFrame, path: str) -> None:
-        clean.coalesce(1).write.mode("append").parquet(path)
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
         # ingest() fans one dispatch branch per table over the batch, and
@@ -385,20 +309,11 @@ def ingest_stream(
         batch_df = batch_df.persist()
         try:
             clean = ingest(batch_df)
-            # Wrapping per task hands each pool thread its own copy of this
-            # thread's local properties (the query's job group, any caller
-            # tags), so the writes stay attributed to and cancellable with
-            # the streaming query.
-            with ThreadPoolExecutor(len(clean)) as pool:
-                writes = [
-                    pool.submit(
-                        inheritable_thread_target(batch_df.sparkSession)(append),
-                        df, f"{out_dir}/{table}",
-                    )
-                    for table, df in clean.items()
-                ]
-                for done in as_completed(writes):
-                    done.result()
+            _land_epoch(
+                {table: df.coalesce(1) for table, df in clean.items()},
+                out_dir,
+                epoch_id,
+            )
         finally:
             batch_df.unpersist()
 
@@ -605,6 +520,74 @@ def c_stream_dedup_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 # trades and order-book queues (it never joins them; ClickHouse gets them
 # as separate tables). The landed pairs are batch-aggregated per instrument
 # and must equal DuckDB's batch interval join over the same fixtures.
+def stream_interval_join(
+    trades: DataFrame, book: DataFrame, n_keys: int | None = None
+) -> DataFrame:
+    """Per-company ``(company_id, n_pairs, bid_sum)`` of the interval join
+    ``b_company_id = company_id AND t_ts - 30 min <= b_ts <= t_ts``.
+
+    ``trades`` (company_id, t_ts) and ``book`` (b_company_id, b_ts,
+    bid_price) are streams already watermarked on their timestamps;
+    ``n_keys``, the join-key count when known, sizes the state partitions.
+    """
+    cond = (
+        (F.col("company_id") == F.col("b_company_id"))
+        & (F.col("b_ts") >= F.col("t_ts") - F.expr("INTERVAL 30 MINUTES"))
+        & (F.col("b_ts") <= F.col("t_ts"))
+    )
+    joined = trades.join(book, cond).select("company_id", "bid_price")
+    # Interval-join output is quadratic in per-key density (every trade x
+    # every in-horizon snapshot) — landing raw pairs in a driver memory
+    # sink broke the round-6 10x scale run. Land per-BATCH partial
+    # aggregates instead (grid-sized: <= n_companies rows per
+    # micro-batch); count and exact-decimal sum are associative, so the
+    # final combine is bit-identical to aggregating the raw pairs.
+    landed = run_to_scratch(
+        joined,
+        "append",
+        batch_transform=lambda b: b.groupBy("company_id").agg(
+            F.count("*").alias("n"),
+            F.sum(F.col("bid_price").cast("decimal(27,6)")).alias("s"),
+        ),
+        state_partitions=_stream_state_partitions(n_keys),
+    )
+    return landed.groupBy("company_id").agg(
+        F.sum("n").cast("long").alias("n_pairs"),
+        F.sum("s").cast("double").alias("bid_sum"),
+    )
+
+
+def _fixture_interval_join(
+    spark: SparkSession, sf_dir: str, book_sql: str
+) -> DataFrame:
+    """:func:`stream_interval_join` of the fixture trades feed against the
+    book feed ``book_sql`` (company_id, ts, bid_price over ``events``).
+    Both feeds derive from the SAME streaming source with the fixtures'
+    shared SQL (the reference publishes trades and book from one API
+    poll): no temp materialization — the per-feed projections run
+    map-side inside each stream's scan."""
+    from ..fixtures import FIXTURE_SQL, domain_table
+
+    configure(spark)
+    events_stream(spark, sf_dir).createOrReplaceTempView("events")
+    trades = spark.sql(FIXTURE_SQL["trades"]).select(
+        "company_id", F.col("ts").cast("timestamp").alias("t_ts")
+    )
+    book = spark.sql(book_sql).select(
+        F.col("company_id").alias("b_company_id"),
+        F.col("ts").cast("timestamp").alias("b_ts"),
+        "bid_price",
+    )
+    # the join-key domain is the companies dimension (one bounded scan of
+    # a grid-sized table)
+    n_keys = domain_table(spark, sf_dir, "companies").count()
+    return stream_interval_join(
+        trades.withWatermark("t_ts", "1 hour"),
+        book.withWatermark("b_ts", "1 hour"),
+        n_keys,
+    )
+
+
 @query(
     "c_stream_stream_interval_join",
     oracle=oracle_on_domain(
@@ -622,81 +605,20 @@ def c_stream_dedup_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def c_stream_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..fixtures import FIXTURE_SQL
 
-    configure(spark)
-    # Both feeds derive from the SAME streaming source with the fixtures'
-    # shared SQL (the reference publishes trades and book from one API
-    # poll): no temp materialization — the per-feed projections run
-    # map-side inside each stream's scan.
-    events_stream(spark, sf_dir).createOrReplaceTempView("events")
-    st = spark.sql(FIXTURE_SQL["trades"]).select(
-        "company_id", F.col("ts").cast("timestamp").alias("t_ts"), "price"
-    )
-    sb = spark.sql(FIXTURE_SQL["order_book"]).select(
-        F.col("company_id").alias("b_company_id"),
-        F.col("ts").cast("timestamp").alias("b_ts"),
-        "bid_price",
-    )
-    cond = (
-        (F.col("company_id") == F.col("b_company_id"))
-        & (F.col("b_ts") >= F.col("t_ts") - F.expr("INTERVAL 30 MINUTES"))
-        & (F.col("b_ts") <= F.col("t_ts"))
-    )
-    # Hot-key salting, AUTO-SIZED from the observed key count (VERDICT r7
-    # ask #5): the join-key domain is the companies dimension, so its
-    # count is the key statistic (one bounded scan of a grid-sized
-    # table). When keys < 2x state partitions, (company_id, salt) becomes
-    # the state-partitioning key so probe work spreads across partitions
-    # that plain hash placement would leave idle — output bit-identical
-    # (proof in with_stream_join_salt); env override still wins.
-    from ..fixtures import domain_table
-
-    n_keys = domain_table(spark, sf_dir, "companies").count()
-    n_salts = _stream_join_salt(n_keys)
-    if n_salts > 1:
-        st, sb = with_stream_join_salt(
-            st, sb, "company_id", "b_company_id", n_salts,
-            _stream_join_hot_keys() or None,
-        )
-        cond = cond & (F.col("__t_salt") == F.col("__b_salt"))
-    joined = (
-        st.withWatermark("t_ts", "1 hour")
-        .join(sb.withWatermark("b_ts", "1 hour"), cond)
-        .select("company_id", "bid_price")
-    )
-    # Interval-join output is quadratic in per-key density (every trade x
-    # every in-horizon snapshot) — landing raw pairs in a driver memory
-    # sink broke the round-6 10x scale run. Land per-BATCH partial
-    # aggregates instead (grid-sized: <= n_companies rows per
-    # micro-batch); count and exact-decimal sum are associative, so the
-    # final combine is bit-identical to aggregating the raw pairs.
-    # r11: state partitions derived from the observed (key x salt) domain
-    # instead of the static default — see _stream_state_partitions.
-    landed = run_to_scratch(
-        joined,
-        "append",
-        batch_transform=lambda b: b.groupBy("company_id").agg(
-            F.count("*").alias("n"),
-            F.sum(F.col("bid_price").cast("decimal(27,6)")).alias("s"),
-        ),
-        state_partitions=_stream_state_partitions(n_keys, n_salts),
-    )
-    return landed.groupBy("company_id").agg(
-        F.sum("n").cast("long").alias("n_pairs"),
-        F.sum("s").cast("double").alias("bid_sum"),
-    )
+    return _fixture_interval_join(spark, sf_dir, FIXTURE_SQL["order_book"])
 
 
 # --------------------------------------------------------------------------
 # DENSITY-CAPPED twin of the stream-stream interval join (VERDICT r8 ask
 # #5): identical join machinery — two watermarked feeds, the same interval
-# condition, the same auto-sized hot-key salt — but the book side keeps
-# only snapshots from a FIXED user cohort (user_id < 150; the scale
-# synthesis shifts copy keys upward, so the cohort — and with it per-key
-# in-horizon snapshot density — stays CONSTANT as data scales). The
-# by-spec quadratic of the headline query is output semantics, not state
-# cost; this twin holds output linear in the trade stream so 10x/100x
-# wall factors measure the state machinery itself. The cap is a stateless
-# map-side filter pushed into the book stream's scan.
+# condition — but the book side keeps only snapshots from a FIXED user
+# cohort (user_id < 150; the scale synthesis shifts copy keys upward, so
+# the cohort — and with it per-key in-horizon snapshot density — stays
+# CONSTANT as data scales). The by-spec quadratic of the headline query is
+# output semantics, not state cost; this twin holds output linear in the
+# trade stream so 10x/100x wall factors measure the state machinery
+# itself. The cap is a stateless map-side filter pushed into the book
+# stream's scan.
 _INTERVAL_CAP_USERS = 150  # ~3 snapshot publishers per company_id
 
 
@@ -721,55 +643,17 @@ _INTERVAL_CAP_USERS = 150  # ~3 snapshot publishers per company_id
     ),
 )
 def c_stream_interval_join_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..fixtures import _COMPANY, FIXTURE_SQL, domain_table
+    from ..fixtures import _COMPANY
 
-    configure(spark)
-    events_stream(spark, sf_dir).createOrReplaceTempView("events")
-    st = spark.sql(FIXTURE_SQL["trades"]).select(
-        "company_id", F.col("ts").cast("timestamp").alias("t_ts"), "price"
-    )
-    sb = spark.sql(
+    return _fixture_interval_join(
+        spark,
+        sf_dir,
         f"""
         SELECT {_COMPANY} AS company_id, ts,
                (value + 0.01) * 0.999 AS bid_price
         FROM events
         WHERE event_id % 3 = 0 AND user_id < {_INTERVAL_CAP_USERS}
-        """
-    ).select(
-        F.col("company_id").alias("b_company_id"),
-        F.col("ts").cast("timestamp").alias("b_ts"),
-        "bid_price",
-    )
-    cond = (
-        (F.col("company_id") == F.col("b_company_id"))
-        & (F.col("b_ts") >= F.col("t_ts") - F.expr("INTERVAL 30 MINUTES"))
-        & (F.col("b_ts") <= F.col("t_ts"))
-    )
-    n_keys = domain_table(spark, sf_dir, "companies").count()
-    n_salts = _stream_join_salt(n_keys)
-    if n_salts > 1:
-        st, sb = with_stream_join_salt(
-            st, sb, "company_id", "b_company_id", n_salts,
-            _stream_join_hot_keys() or None,
-        )
-        cond = cond & (F.col("__t_salt") == F.col("__b_salt"))
-    joined = (
-        st.withWatermark("t_ts", "1 hour")
-        .join(sb.withWatermark("b_ts", "1 hour"), cond)
-        .select("company_id", "bid_price")
-    )
-    landed = run_to_scratch(
-        joined,
-        "append",
-        batch_transform=lambda b: b.groupBy("company_id").agg(
-            F.count("*").alias("n"),
-            F.sum(F.col("bid_price").cast("decimal(27,6)")).alias("s"),
-        ),
-        state_partitions=_stream_state_partitions(n_keys, n_salts),
-    )
-    return landed.groupBy("company_id").agg(
-        F.sum("n").cast("long").alias("n_pairs"),
-        F.sum("s").cast("double").alias("bid_sum"),
+        """,
     )
 
 
@@ -1125,15 +1009,14 @@ def c_stream_dlq_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def land(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         clean, rejected = validate(dispatch(batch_df)["trades"], "trades")
-        clean.write.mode("append").parquet(f"{tmp}/warehouse")
         reason = F.when(
             F.col("price").isNull(), "missing_required"
         ).otherwise("bad_timestamp")
-        rejected.withColumn("reason", reason).write.mode("append").parquet(
-            f"{tmp}/dlq"
+        _land_epoch(
+            {"warehouse": clean, "dlq": rejected.withColumn("reason", reason)},
+            tmp,
+            epoch_id,
         )
 
     q = (
@@ -1371,16 +1254,11 @@ def c_stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     # runs repeatedly, not once (a single batch would make it a rename).
     batch = spark.read.parquet(f"{sf_dir}/events.parquet")
     batch.repartition(4).write.mode("overwrite").parquet(f"{tmp}/src")
-    raw = (
+    raw = normalize_events_ts(
         spark.readStream.schema(batch.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(f"{tmp}/src")
     )
-    if dict(batch.dtypes).get("ts") == "bigint":
-        raw = raw.withColumn(
-            "ts",
-            F.timestamp_micros(F.expr("ts div 1000")).cast("timestamp_ntz"),
-        )
     changes = raw.withColumn(
         "op", F.when(F.col("event_id") % 10 == 0, "D").otherwise("U")
     )
@@ -1493,16 +1371,11 @@ def c_stream_pit_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     tmp = scratch_dir("c_pit_")
     batch = spark.read.parquet(f"{sf_dir}/events.parquet")
     batch.repartition(4).write.mode("overwrite").parquet(f"{tmp}/src")
-    raw = (
+    raw = normalize_events_ts(
         spark.readStream.schema(batch.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(f"{tmp}/src")
     )
-    if dict(batch.dtypes).get("ts") == "bigint":
-        raw = raw.withColumn(
-            "ts",
-            F.timestamp_micros(F.expr("ts div 1000")).cast("timestamp_ntz"),
-        )
     st = raw.select(
         "user_id",
         "event_id",
@@ -1565,17 +1438,11 @@ def c_stream_pit_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def c_stream_late_drop_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     import glob as _glob
-    import os
     import shutil
 
     configure(spark)
     tmp = scratch_dir("c_late_")
-    batch = spark.read.parquet(f"{sf_dir}/events.parquet")
-    if dict(batch.dtypes).get("ts") == "bigint":
-        batch = batch.withColumn(
-            "ts",
-            F.timestamp_micros(F.expr("ts div 1000")).cast("timestamp_ntz"),
-        )
+    batch = normalize_events_ts(spark.read.parquet(f"{sf_dir}/events.parquet"))
     cutoff = "2024-01-16"
     on_time = batch.filter(F.col("ts") >= cutoff)
     late = batch.filter(F.col("ts") < cutoff)
@@ -1591,36 +1458,27 @@ def c_stream_late_drop_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "1 hour",
         watermark="24 hours",
     )
-    import uuid
-
     name = f"mem_{uuid.uuid4().hex[:10]}"
-    with _SHUFFLE_OVERRIDE_LOCK:
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS)
+    with _shuffle_partitions(spark, STREAM_STATE_PARTITIONS):
+        q = (
+            windowed.writeStream.format("memory")
+            .queryName(name)
+            .outputMode("append")
+            .trigger(processingTime="500 milliseconds")
+            .start()
         )
-        try:
-            q = (
-                windowed.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("append")
-                .trigger(processingTime="500 milliseconds")
-                .start()
-            )
-            # batch 0: the punctual half only; watermark advances after it
-            q.processAllAvailable()
-            # the late half becomes visible one trigger later
-            shutil.copy(
-                _glob.glob(f"{tmp}/f2/part-*.parquet")[0],
-                f"{tmp}/src/01.parquet",
-            )
-            # batch 1: filtered against the advanced watermark — drops all
-            # late rows and emits the closed on-time windows
-            q.processAllAvailable()
-            q.stop()
-            q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+        # batch 0: the punctual half only; watermark advances after it
+        q.processAllAvailable()
+        # the late half becomes visible one trigger later
+        shutil.copy(
+            _glob.glob(f"{tmp}/f2/part-*.parquet")[0],
+            f"{tmp}/src/01.parquet",
+        )
+        # batch 1: filtered against the advanced watermark — drops all
+        # late rows and emits the closed on-time windows
+        q.processAllAvailable()
+        q.stop()
+        q.awaitTermination()
     return spark.table(name).select(
         F.col("window_start").cast("timestamp_ntz").alias("window_start"),
         "event_type",
@@ -1633,9 +1491,9 @@ def c_stream_late_drop_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Streaming as-of enrichment via foreachBatch — Structured Streaming has
 # no native as-of join, but when the RIGHT side is static each row's
 # backward match depends only on that row plus the complete static book,
-# so the join is batch-decomposable: foreachBatch applies the BATCH
-# as_of_join operator (functions/asof.py, the b3 machinery) to every
-# micro-batch and appends to an exactly-once parquet sink. This is the
+# so the join is batch-decomposable: run_to_scratch's batch_transform
+# applies the BATCH as_of_join operator (functions/asof.py, the b3
+# machinery) to every micro-batch before its replay-safe landing. This is the
 # canonical reuse-the-batch-operator-in-streaming pattern; at 100 TB
 # the static side ships once per micro-batch plan and the stream never
 # waits for watermarks it doesn't need. Oracle: DuckDB ASOF LEFT JOIN
@@ -1676,12 +1534,8 @@ def c_stream_asof_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     book = domain_table(spark, sf_dir, "order_book").select(
         "company_id", "ts", "bid_price", "ask_price"
     )
-    tmp = scratch_dir("stream_asof_")
-    out_dir, ckpt = f"{tmp}/out", f"{tmp}/ckpt"
 
-    def enrich_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def enrich(batch_df: DataFrame) -> DataFrame:
         joined = as_of_join(
             batch_df,
             book,
@@ -1692,7 +1546,7 @@ def c_stream_asof_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
             direction="backward",
             matched_ts_col="book_ts",
         )
-        joined.select(
+        return joined.select(
             "company_id",
             "ts",
             "book_ts",
@@ -1700,25 +1554,9 @@ def c_stream_asof_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.unix_micros(F.col("ts").cast("timestamp"))
                 - F.unix_micros(F.col("book_ts").cast("timestamp"))
             ).alias("gap"),
-        ).write.mode("append").parquet(out_dir)
-
-    with _SHUFFLE_OVERRIDE_LOCK:
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS)
         )
-        try:
-            q = (
-                trades.writeStream.foreachBatch(enrich_batch)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
 
-    landed = spark.read.parquet(out_dir)
+    landed = run_to_scratch(trades, batch_transform=enrich)
     return landed.groupBy("company_id").agg(
         F.count("*").cast("long").alias("n_trades"),
         F.count("book_ts").cast("long").alias("n_matched"),

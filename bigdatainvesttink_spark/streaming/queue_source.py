@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from ..registry import query
 from ..schemas import TS_FORMAT
 from ..sources.ingest import ingest
+from .pipeline import _land_epoch
 
 # Deterministic corruption slots (out of every 50 messages): one malformed
 # JSON (dropped at dispatch), one missing-required field (dropped at
@@ -158,20 +159,20 @@ def queue_ingest(
     rows_per_second: int = 1000,
     trigger_interval: str = "1 second",
 ):
-    """Continuous consume loop: rate-source wire -> ingest() -> per-table
-    parquet append under one checkpoint. The ``seq`` column rides along into
-    the sink so delivery (no loss, no re-consume after restart) is auditable
-    from the output alone. Returns the StreamingQuery (caller stops it)."""
+    """Continuous consume loop: rate-source wire -> ingest() -> the trades
+    table, one epoch directory per micro-batch under one checkpoint
+    (``pipeline._land_epoch``). The raw ``seq`` offsets land beside it in
+    ``_seqs`` so delivery (no loss, no re-consume after restart: a gap is
+    loss, a duplicate re-consume) is auditable from the output alone.
+    Returns the StreamingQuery (caller stops it)."""
     wire = rate_wire_stream(spark, rows_per_second)
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        ingest(batch_df)["trades"].write.mode("append").parquet(
-            f"{out_dir}/trades"
+        _land_epoch(
+            {"trades": ingest(batch_df)["trades"], "_seqs": batch_df.select("seq")},
+            out_dir,
+            epoch_id,
         )
-        # the raw offsets, for delivery audit (gap = loss, dup = re-consume)
-        batch_df.select("seq").write.mode("append").parquet(f"{out_dir}/_seqs")
 
     return (
         wire.writeStream.foreachBatch(write_batch)

@@ -624,69 +624,6 @@ def test_brute_force_topk_zero_norm_raises(spark):
         vectorized.brute_force_topk(zv, q, 3).collect()
 
 
-def test_stream_interval_join_salted_matches_unsalted(spark, monkeypatch):
-    """Hot-key salting (VERDICT r6 ask #3) must be invisible in the
-    output: probe rows carry one deterministic salt, the build side is
-    replicated once per salt, so every (trade, book) pair still meets
-    exactly once — for any salt factor, and also when salting is
-    restricted to a hot-key subset."""
-    from bigdatainvesttink_spark.streaming.pipeline import (
-        c_stream_stream_interval_join,
-    )
-
-    def run():
-        return sorted(
-            map(
-                tuple,
-                c_stream_stream_interval_join(spark, SF_SMALL).collect(),
-            )
-        )
-
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_JOIN_SALT", raising=False)
-    want = run()
-    assert want, "fixture join produced no pairs"
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_JOIN_SALT", "4")
-    assert run() == want
-    # restrict salting to the two lexicographically-first companies
-    hot = ",".join(sorted({r[0] for r in want})[:2])
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_JOIN_HOT_KEYS", hot)
-    assert run() == want
-    # the AUTO-sized default path (r7 ask #5): with state partitions
-    # raised past half the key count, salting turns itself on (no env
-    # var) and the output stays bit-identical
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_JOIN_SALT", raising=False)
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_JOIN_HOT_KEYS", raising=False)
-    from bigdatainvesttink_spark.streaming import pipeline as P
-
-    monkeypatch.setattr(P, "STREAM_STATE_PARTITIONS", 32)
-    n_keys = len({r[0] for r in want})
-    assert P._stream_join_salt(n_keys) > 1, "auto path did not engage"
-    assert run() == want
-
-
-def test_stream_join_salt_autosizing(monkeypatch):
-    """The default n_salts derives from observed keys vs state partitions
-    (VERDICT r7 ask #5): OFF when keys >= 2x partitions (hash placement
-    already smooth), else the smallest power of two reaching ~8 sub-keys
-    per partition — reproducing the measured 10x winner (50 keys, 32
-    partitions -> salt 8: 450.7 s -> 274.0 s) — capped at 16; the env
-    override always wins."""
-    from bigdatainvesttink_spark.streaming import pipeline as P
-
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_JOIN_SALT", raising=False)
-    monkeypatch.setattr(P, "STREAM_STATE_PARTITIONS", 32)
-    assert P._stream_join_salt(50) == 8    # the measured 10x configuration
-    assert P._stream_join_salt(64) == 1    # keys >= 2x partitions -> off
-    assert P._stream_join_salt(1000) == 1
-    assert P._stream_join_salt(10) == 16   # replication cap
-    assert P._stream_join_salt(None) == 1  # no statistic -> conservative
-    monkeypatch.setattr(P, "STREAM_STATE_PARTITIONS", 8)
-    assert P._stream_join_salt(50) == 1    # sandbox default stays off
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_JOIN_SALT", "4")
-    assert P._stream_join_salt(50) == 4    # explicit override wins
-    assert P._stream_join_salt(None) == 4
-
-
 def test_neardup_index_broadcast_autosized_plan(spark, monkeypatch):
     """The corpus LSH band index is data-sized, so its broadcast hint must
     derive from an observed statistic, not be pinned (VERDICT r8 ask #1):

@@ -90,6 +90,55 @@ def test_ingest_stream_write_error_fails_epoch(spark, tmp_path):
     assert q.exception() is not None
     assert not (tmp_path / "ckpt" / "commits" / "0").exists()
 
+
+def _candle(i, second):
+    return json.dumps(
+        {
+            "company_id": f"F{i % 3}",
+            "timestamp": f"2024-01-01 10:00:{second:02d}",
+            "open": 1.0, "high": 2.0, "low": 0.5, "close": 1.5, "volume": i + 1,
+        }
+    )
+
+
+def test_ingest_stream_replayed_epoch_lands_once(spark, tmp_path):
+    """A drive whose trades write fails has already landed its candles;
+    the restart replays the same epoch, and that replay must overwrite the
+    candles it landed, not append a second copy."""
+    src = tmp_path / "src"
+    src.mkdir()
+    (src / "w.jsonl").write_text(
+        "\n".join([_candle(i, i) for i in range(5)] + [_trade(i, i) for i in range(5)])
+    )
+    ckpt, out = str(tmp_path / "ckpt"), tmp_path / "out"
+    out.mkdir()
+    (out / "trades").write_text("a file where the trades directory belongs")
+    q = ingest_stream(spark, str(src), ckpt, str(out))
+    with pytest.raises(StreamingQueryException):
+        q.awaitTermination()
+
+    (out / "trades").unlink()
+    q2 = ingest_stream(spark, str(src), ckpt, str(out))  # replays epoch 0
+    q2.awaitTermination()
+    assert q2.exception() is None
+    assert spark.read.parquet(f"{out}/candles").count() == 5
+    assert spark.read.parquet(f"{out}/trades").count() == 5
+
+
+def test_streaming_sinks_never_append():
+    """Every foreachBatch sink lands through _land_epoch's per-epoch
+    overwrite; an appending write would duplicate a replayed epoch."""
+    import pathlib
+
+    import bigdatainvesttink_spark.streaming as streaming
+
+    root = pathlib.Path(streaming.__file__).parent
+    appending = [
+        p.name for p in sorted(root.glob("*.py"))
+        if 'mode("append")' in p.read_text()
+    ]
+    assert appending == []
+
 def test_watermark_drops_late_rows(spark, tmp_path):
     """C4: with a watermark, an event far behind the stream's max event time
     is dropped from append-mode windowed aggregation — the deliberate
@@ -473,23 +522,20 @@ def test_run_to_scratch_epoch_replay_idempotent(spark, tmp_path):
     batch = spark.createDataFrame(
         [("A", 3), ("B", 4)], "company_id string, n long"
     )
-    _land_epoch(batch, path, 0)
-    _land_epoch(spark.createDataFrame([("C", 5)], batch.schema), path, 1)
+    _land_epoch({"t": batch}, path, 0)
+    _land_epoch({"t": spark.createDataFrame([("C", 5)], batch.schema)}, path, 1)
     # replay epoch 0 (same payload, same epoch_id) — must not duplicate
-    _land_epoch(batch, path, 0)
+    _land_epoch({"t": batch}, path, 0)
     got = sorted(
-        map(tuple, spark.read.parquet(f"{path}/e*").collect())
+        map(tuple, spark.read.parquet(f"{path}/t/epoch=*").collect())
     )
     assert got == [("A", 3), ("B", 4), ("C", 5)]
 
 
 def test_run_to_scratch_lands_epoch_dirs(spark, tmp_path):
-    """End-to-end: run_to_scratch writes one e{epoch} dir per micro-batch
-    plus the e_init schema seed, and the read-back sees exactly the
-    streamed rows (update mode — the landed-rows class the memory sink no
-    longer serves)."""
-    import os as _os
-
+    """End-to-end: run_to_scratch writes one epoch=<id> dir per
+    micro-batch, and the read-back sees exactly the streamed rows, without
+    an epoch column."""
     from bigdatainvesttink_spark.streaming.pipeline import run_to_scratch
 
     src = tmp_path / "rts_src"
@@ -500,3 +546,62 @@ def test_run_to_scratch_lands_epoch_dirs(spark, tmp_path):
     sdf = spark.readStream.schema("k string, v long").json(str(src))
     landed = run_to_scratch(sdf, "append")
     assert sorted(map(tuple, landed.collect())) == [("A", 1), ("B", 2)]
+
+
+def test_stream_interval_join_bounds(spark, tmp_path):
+    """The interval join keeps book rows at exactly t - 30 min and t and
+    drops those 1 us outside either bound, as DuckDB's
+    ``b.ts >= t.ts - INTERVAL 30 MINUTE AND b.ts <= t.ts`` does; a book
+    row of another company never pairs."""
+    import duckdb
+
+    from bigdatainvesttink_spark.streaming.pipeline import stream_interval_join
+
+    trades = [("A", "2024-01-01 10:00:00"), ("B", "2024-01-01 12:00:00")]
+    book = [
+        ("A", "2024-01-01 09:30:00", 1.5),         # t - 30 min: in
+        ("A", "2024-01-01 09:29:59.999999", 2.25),  # 1 us before: out
+        ("A", "2024-01-01 10:00:00", 4.0),          # t: in
+        ("A", "2024-01-01 10:00:00.000001", 8.0),   # 1 us after: out
+        ("B", "2024-01-01 10:00:00", 16.0),         # A's t, B's key: out
+        ("B", "2024-01-01 11:45:00", 32.0),         # in
+    ]
+
+    def stream(rows, schema, ts):
+        path = str(tmp_path / ts)
+        frame = spark.createDataFrame(rows, schema)
+        frame.withColumn(ts, F.col(ts).cast("timestamp")).write.parquet(path)
+        return (
+            spark.readStream.schema(spark.read.parquet(path).schema)
+            .parquet(path)
+            .withWatermark(ts, "1 hour")
+        )
+
+    got = stream_interval_join(
+        stream(trades, "company_id string, t_ts string", "t_ts"),
+        stream(book, "b_company_id string, b_ts string, bid_price double", "b_ts"),
+    )
+    con = duckdb.connect()
+    con.execute(
+        "CREATE TABLE t AS SELECT company_id, CAST(ts AS TIMESTAMP) AS ts "
+        "FROM (VALUES " + ", ".join(f"('{c}', '{ts}')" for c, ts in trades)
+        + ") v(company_id, ts)"
+    )
+    con.execute(
+        "CREATE TABLE b AS SELECT company_id, CAST(ts AS TIMESTAMP) AS ts, "
+        "bid_price FROM (VALUES "
+        + ", ".join(f"('{c}', '{ts}', {p})" for c, ts, p in book)
+        + ") v(company_id, ts, bid_price)"
+    )
+    want = con.execute(
+        """
+        SELECT t.company_id, COUNT(*) AS n_pairs,
+               CAST(SUM(CAST(b.bid_price AS DECIMAL(27,6))) AS DOUBLE)
+        FROM t JOIN b
+          ON b.company_id = t.company_id
+         AND b.ts >= t.ts - INTERVAL 30 MINUTE AND b.ts <= t.ts
+        GROUP BY t.company_id
+        """
+    ).fetchall()
+    assert sorted(want) == [("A", 2, 5.5), ("B", 1, 32.0)]
+    assert sorted(map(tuple, got.collect())) == sorted(want)
