@@ -75,32 +75,87 @@ STREAM_STATE_PARTITIONS = int(
 )
 
 
-def _stream_state_partitions(n_keys: int | None = None) -> int:
+def _stream_state_partitions(
+    n_keys: int | None = None, n_salts: int = 1
+) -> int:
     """State-store partition count for a stateful drive, derived from the
-    observed key count when the caller knows it.
+    observed (key, salt) domain when the caller knows it.
 
     Every state partition pays fixed per-micro-batch overhead (store
     instantiation, commit, snapshot), so the sizing statistic is how many
-    keys there are to spread: ~8 keys per partition, floored at 1, capped
-    at the harness core budget — a key domain smaller than 8 x partitions
-    leaves stores near-empty (pure overhead at sf0.1, real straggler waste
-    at 100 TB), while a domain past 8 x cores earns every core a store.
-    The env override always wins (production sizes to state VOLUME, which
-    only the deployment knows); callers with no key statistic keep the
-    static default."""
+    (key, salt) groups there are to spread: ~8 per partition (the balance
+    point of the 10x salt sweep), floored at 1, capped at the harness core
+    budget — a domain smaller than 8 x partitions leaves stores near-empty
+    (pure overhead at sf0.1, real straggler waste at 100 TB), while a
+    domain past 8 x cores earns every core a store. The env override
+    always wins (production sizes to state VOLUME, which only the
+    deployment knows); callers with no key statistic keep the static
+    default."""
     raw = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS")
     if raw is not None:
         return int(raw)
     if not n_keys or n_keys <= 0:
         return STREAM_STATE_PARTITIONS
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", str(STREAM_STATE_PARTITIONS)))
-    target = max(1, (n_keys + 7) // 8)
+    target = max(1, (n_keys * n_salts + 7) // 8)
     # Round UP to a power of two before capping: measured A/B at sf0.1
     # (50 keys -> target 7) read 9.5-11.3 s vs 8.3 s at 8 partitions on
     # the headline interval join — sub-power-of-two counts left a longer
     # straggler tail in the state stages for zero overhead saved.
     pow2 = 1 << (target - 1).bit_length()
     return min(cpus, pow2)
+
+
+def _stream_join_salt(n_keys: int | None = None) -> int:
+    """Salt factor for the stream-stream interval joins, sized from the
+    observed join-key count against the configured state partitions.
+
+    The 10x measurement (BENCH_SCALE.md) showed salting wins even on
+    uniform keys whenever distinct join keys are FEW relative to state
+    partitions (50 keys over 32 partitions: 450.7 s -> 274.0 s at salt 8,
+    output content-hash identical): hash placement leaves some partitions
+    idle while those holding 2-3 keys of quadratic probe work serialize.
+    So the salt is OFF when keys >= 2 x STREAM_STATE_PARTITIONS (placement
+    already smooth), else the smallest power of two making
+    keys x n_salts >= 8 x partitions (~8 sub-keys per partition: 50 keys
+    x salt 8 = 400 over 32 partitions), capped at 16 to bound build-side
+    state replication."""
+    if n_keys is None or n_keys <= 0:
+        return 1
+    partitions = STREAM_STATE_PARTITIONS
+    if n_keys >= 2 * partitions:
+        return 1
+    n = 1
+    while n_keys * n < 8 * partitions and n < 16:
+        n *= 2
+    return n
+
+
+def with_stream_join_salt(
+    probe: DataFrame, build: DataFrame, n_salts: int
+) -> tuple[DataFrame, DataFrame]:
+    """Split every stream-stream join key into ``n_salts`` sub-buckets.
+    Join state is hash-partitioned by the EQUALITY keys, so one key's
+    quadratic probe work lands on one state partition however many exist.
+    The probe side gets a deterministic row-hash salt (``__t_salt``); the
+    build side is replicated once per salt (``__b_salt`` exploded
+    0..n-1), so every probe row still meets every build row of its key
+    EXACTLY ONCE and the join output is identical for any n_salts. Cost:
+    build-side state x n_salts — the classic replicate-the-sparse-side
+    skew trade.
+
+    Adding ``__t_salt == __b_salt`` to the join condition is what splits
+    the state: the (key, salt) pair becomes the partitioning key, so a
+    key's probe work spreads over n_salts state partitions.
+    """
+    salted_probe = probe.withColumn(
+        "__t_salt",
+        F.pmod(F.xxhash64(*probe.columns), F.lit(n_salts)).cast("int"),
+    )
+    salted_build = build.withColumn(
+        "__b_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
+    )
+    return salted_probe, salted_build
 
 
 def _neardup_index_broadcast_rows() -> int:
@@ -528,13 +583,18 @@ def stream_interval_join(
 
     ``trades`` (company_id, t_ts) and ``book`` (b_company_id, b_ts,
     bid_price) are streams already watermarked on their timestamps;
-    ``n_keys``, the join-key count when known, sizes the state partitions.
+    ``n_keys``, the join-key count when known, sizes the salt
+    (:func:`_stream_join_salt`) and the state partitions.
     """
     cond = (
         (F.col("company_id") == F.col("b_company_id"))
         & (F.col("b_ts") >= F.col("t_ts") - F.expr("INTERVAL 30 MINUTES"))
         & (F.col("b_ts") <= F.col("t_ts"))
     )
+    n_salts = _stream_join_salt(n_keys)
+    if n_salts > 1:
+        trades, book = with_stream_join_salt(trades, book, n_salts)
+        cond = cond & (F.col("__t_salt") == F.col("__b_salt"))
     joined = trades.join(book, cond).select("company_id", "bid_price")
     # Interval-join output is quadratic in per-key density (every trade x
     # every in-horizon snapshot) — landing raw pairs in a driver memory
@@ -549,7 +609,7 @@ def stream_interval_join(
             F.count("*").alias("n"),
             F.sum(F.col("bid_price").cast("decimal(27,6)")).alias("s"),
         ),
-        state_partitions=_stream_state_partitions(n_keys),
+        state_partitions=_stream_state_partitions(n_keys, n_salts),
     )
     return landed.groupBy("company_id").agg(
         F.sum("n").cast("long").alias("n_pairs"),

@@ -13,6 +13,7 @@ frame goes through every per-query gate:
 3. the hash-fatal dtype check against the same oracle SQL
    (``tools/check_dtypes.dtype_issues``).
 
+The salted stream-stream joins get the same check at sf0.001, and
 ``compare``, the gate every case rests on, has its own reports pinned on
 tiny frames at the bottom of this file.
 """
@@ -23,6 +24,7 @@ import duckdb
 import pytest
 
 import __spark_entry__ as entrymod
+from tests.conftest import SF_SMALL
 from tools.check_dtypes import dtype_issues
 from tools.check_oracle import compare, duck_con
 from tools.scan_antipatterns import plan_flags
@@ -32,6 +34,12 @@ SF = "/root/testdata/sf0.01"
 # Approximate aggregates have no exact oracle; they are only checked
 # non-empty.
 ROWS_ONLY = {"rel_approx_aggs"}
+
+# sf0.001 has 15 companies, so these stream-stream joins salt their join key
+# 8 ways; the 50 companies of sf0.01 and sf0.1 leave salting off. Only the
+# sf0.001 cases run the salted branch against the oracle.
+SALTED_STREAM_JOINS = ["c_stream_stream_interval_join", "c_stream_interval_join_capped"]
+
 
 def _check(spark, name, sf_dir):
     spark.catalog.clearCache()
@@ -57,6 +65,16 @@ def _check(spark, name, sf_dir):
 @pytest.mark.parametrize("name", sorted(entrymod.queries()))
 def test_query_nonempty_sf001(spark, name):
     _check(spark, name, SF)
+
+
+@pytest.mark.parametrize("name", SALTED_STREAM_JOINS)
+def test_salted_stream_join_sf0001(spark, name):
+    from bigdatainvesttink_spark.fixtures import domain_table
+    from bigdatainvesttink_spark.streaming.pipeline import _stream_join_salt
+
+    n_keys = domain_table(spark, SF_SMALL, "companies").count()
+    assert _stream_join_salt(n_keys) > 1, "sf0.001 no longer salts the join"
+    _check(spark, name, SF_SMALL)
 
 
 @pytest.mark.parametrize(

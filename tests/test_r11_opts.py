@@ -17,14 +17,15 @@ def test_stream_state_partitions_derivation(monkeypatch):
     assert P._stream_state_partitions(None) == P.STREAM_STATE_PARTITIONS
     assert P._stream_state_partitions(0) == P.STREAM_STATE_PARTITIONS
     # ~8 sub-keys per partition, rounded up to a power of two
-    assert P._stream_state_partitions(50) == 8
-    assert P._stream_state_partitions(4) == 1
-    assert P._stream_state_partitions(100) == 16
-    # the core budget caps it
-    assert P._stream_state_partitions(10_000) == 32
+    assert P._stream_state_partitions(50, 1) == 8
+    assert P._stream_state_partitions(4, 1) == 1
+    assert P._stream_state_partitions(100, 1) == 16
+    # salt multiplies the domain; the core budget caps it
+    assert P._stream_state_partitions(50, 8) == 32
+    assert P._stream_state_partitions(10_000, 1) == 32
     # explicit env override always wins
     monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "12")
-    assert P._stream_state_partitions(50) == 12
+    assert P._stream_state_partitions(50, 1) == 12
 
 
 def test_checkpoint_mode_selection(monkeypatch):

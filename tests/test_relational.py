@@ -30,8 +30,7 @@ def test_queries_have_oracles(spark):
 @pytest.mark.parametrize("name", sorted(entrymod.queries()))
 def test_query_runs_sf0001(spark, name):
     # sf0.001 is small enough to change plans and branches (15 companies
-    # size the stream-stream joins' state partitions), so the plan scan
-    # runs here too
+    # salt the stream-stream joins), so the plan scan runs here too
     spark.catalog.clearCache()
     df = entrymod.queries()[name](spark, SF_SMALL)
     flags = plan_flags(name, df)
